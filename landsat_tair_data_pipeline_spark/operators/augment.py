@@ -219,11 +219,13 @@ def jitter_geo(
 # ---------------------------------------------------------------------------
 
 
-# The assembled feature frame is shared with the domain suite —
-# domain.features_with_gt is session-memoized + persisted, so
-# aug_explode_4x / map_concat_features / domain_pipeline_summary all
-# reuse ONE materialization instead of each rebuilding the 365-array
-# assembly (~4 s analysis + ~5 s execution per rebuild).
+# The assembled feature frame is shared with the domain suite:
+# domain.features_with_gt memoizes it per session and persists it, so
+# aug_explode_4x / map_concat_features / domain_pipeline_summary scan
+# one cached materialization per session instead of each rebuilding
+# the 365-array assembly. That holds only while the frame's cache
+# entry survives (see the ordering note at domain._FEATURES_MEMO);
+# tests/test_domain_cache.py pins the InMemoryTableScan in each plan.
 _features_with_gt = features_with_gt
 
 

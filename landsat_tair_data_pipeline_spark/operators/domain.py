@@ -377,6 +377,13 @@ FROM btpx WHERE {probe}
 # frame is one row per qualified (scene, station) — dimension-sized
 # even at full reference cardinality — so MEMORY_AND_DISK is safe at
 # scale.
+#
+# Cache entries live in the CacheManager, which every session of one
+# SparkContext shares and which matches entries by PLAN, not by
+# DataFrame identity. The replaced frame and its successor have the
+# same plan, so the replaced frame must be unpersisted BEFORE the new
+# one is persisted: unpersisting it afterwards drops the entry the new
+# persist() resolved to, and every consumer recomputes the chain.
 _FEATURES_MEMO: list = [None]  # [(weakref to session, DataFrame)] | [None]
 
 
@@ -386,7 +393,19 @@ def features_with_gt(spark: SparkSession) -> DataFrame:
     SparkSession (single-slot: the latest session)."""
     slot = _FEATURES_MEMO[0]
     if slot is not None and slot[0]() is spark:
-        return slot[1]
+        out = slot[1]
+        # storageLevel asks the CacheManager (is_cached is a Python-side
+        # flag): a clearCache() since the memo was filled leaves NONE
+        if out.storageLevel == StorageLevel.NONE:
+            out.persist(StorageLevel.MEMORY_AND_DISK)
+        return out
+    if slot is not None and slot[0]() is not None:
+        # deterministic release of the replaced frame's entry (waiting
+        # for GC + ContextCleaner lets copies accumulate)
+        try:
+            slot[1].unpersist()
+        except Exception:
+            pass  # session mid-shutdown; blocks die with it anyway
     base = to_brightness_temperature(_valid_scene_base(spark))
     base = _scene_dates(base)
     gt1 = _gt_first_match(spark)
@@ -402,15 +421,6 @@ def features_with_gt(spark: SparkSession) -> DataFrame:
     # scale the join output is too large to coalesce anyway.
     full = full.repartition(spark.sparkContext.defaultParallelism)
     out = assemble_features(full).persist(StorageLevel.MEMORY_AND_DISK)
-    evicted = _FEATURES_MEMO[0]
-    if evicted is not None and evicted[0]() is not None:
-        # deterministic release of the replaced frame's blocks (the
-        # block manager is shared across sessions of one context;
-        # waiting for GC + ContextCleaner lets copies accumulate)
-        try:
-            evicted[1].unpersist()
-        except Exception:
-            pass  # session mid-shutdown; blocks die with it anyway
     _FEATURES_MEMO[0] = (weakref.ref(spark), out)
     return out
 

@@ -1240,7 +1240,10 @@ def sim_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
         "n_queries",
         F.col("_n_exact").alias("n_exact_pairs"),
         F.col("_n_hits").cast("bigint").alias("n_hits"),
-        F.round(F.col("_n_hits") / F.col("_n_exact") + 1e-9, 4).alias("recall"),
+        # NULL with no probe query, like the oracle's 0 / 0
+        F.round(
+            F.try_divide(F.col("_n_hits"), F.col("_n_exact")) + 1e-9, 4
+        ).alias("recall"),
     )
 
 
@@ -1304,11 +1307,18 @@ def _pq_search_ranked(
     from ..util import persist_tracked
 
     emb = persist_tracked(_emb(spark, sf))
-    C = _pq_codebook_block(emb)
-    nsub = C.shape[1] // _PQ_SUBDIM
     probes = (
         emb.where(F.col("vec_id") < _ADC_NQ).select("vec_id", "v").collect()
     )
+    if not probes:
+        # no probe query: both rankings are empty (the kernels below
+        # cannot stack a zero-query block)
+        empty = spark.createDataFrame(
+            [], "query_id long, vec_id long, rn int"
+        )
+        return empty, empty
+    C = _pq_codebook_block(emb)
+    nsub = C.shape[1] // _PQ_SUBDIM
     probes.sort(key=lambda r: int(r["vec_id"]))
     qids = np.array([int(r["vec_id"]) for r in probes], dtype=np.int64)
     Q = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in probes])

@@ -147,17 +147,35 @@ def scene_metadata(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataF
     return df
 
 
+# Read schemas of the two parquet patch tables (FIXTURES.md §A.3). An
+# explicit schema spares every spark.read.parquet a schema-inference
+# job over the file footers at plan-build time (one Spark job per read).
+PARQUET_SCHEMAS = {
+    "scene_patches": (
+        "scene_id string, station_pos int, station_id int,"
+        " bands array<array<array<int>>>"
+    ),
+    "scene_pixels": (
+        "scene_id string, station_id int, band int, y int, x int, dn int"
+    ),
+}
+
+
 def scene_patches(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
     """Nested patch form: one row per (scene, station), bands as
     array<array<array<int>>> (bands × 7 × 7)."""
-    return spark.read.parquet(f"{fixture_dir}/scene_patches.parquet")
+    return spark.read.schema(PARQUET_SCHEMAS["scene_patches"]).parquet(
+        f"{fixture_dir}/scene_patches.parquet"
+    )
 
 
 def scene_pixels(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
     """Fully-long pixel form (scene_id, station_id, band, y, x, dn) —
     the 100 TB layout (SURVEY §1.7): plain columns, partition-prunable,
     no nested codegen pressure."""
-    return spark.read.parquet(f"{fixture_dir}/scene_pixels.parquet")
+    return spark.read.schema(PARQUET_SCHEMAS["scene_pixels"]).parquet(
+        f"{fixture_dir}/scene_pixels.parquet"
+    )
 
 
 def _real_pt_decoder(content: bytes) -> list:
