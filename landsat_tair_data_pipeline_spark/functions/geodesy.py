@@ -3,10 +3,10 @@
 The reference's coordinate jitter derives meters-per-degree from geopy
 WGS-84 geodesics (reference data_augmentation.py:69-99:
 ``geodesic((lat, lon), (lat, lon±1)).meters``). The engine's original
-stand-in was a spherical haversine (<0.35% off — pinned in
-tests/test_augment.py); this module closes that gap with Vincenty's
-inverse formula (public, Vincenty 1975), which agrees with geopy's
-Karney implementation to sub-millimeter at 1° spans.
+stand-in was a spherical haversine (<0.35% off); this module closes
+that gap with Vincenty's inverse formula (public, Vincenty 1975),
+which agrees with geopy's Karney implementation to sub-millimeter at
+1° spans.
 
 Why a Pandas UDF and not column trig: Vincenty iterates on λ, and each
 iteration references the prior λ several times — unrolled as a Column
@@ -14,9 +14,7 @@ tree the expression DOUBLES per reference per iteration (4^n growth),
 blowing up Catalyst analysis. The consumer (jitter_geo) only ever
 evaluates this over the stations DIMENSION (hundreds of rows, even at
 100 TB fact scale), so an Arrow-batched numpy kernel is the right
-trade: exact, vectorized, and off the fact path. The spherical
-column-expression fallback (augment._meters_per_degree) remains for
-anything fact-scale.
+trade: exact, vectorized, and off the fact path.
 """
 
 from __future__ import annotations

@@ -74,6 +74,17 @@ def np_ln(arg: Column) -> Column:
     )
 
 
+def brightness_temperatures(
+    radiance: Column, k1: Column, k2: Column
+) -> tuple[Column, Column]:
+    """(Landsat 5, Landsat 8/9) brightness temperature of a thermal-band
+    radiance — the two formulas of the module docstring, with numpy
+    division/log semantics (np_div, np_ln)."""
+    l5 = np_div(k2, np_ln(np_div(k1, radiance) + F.lit(1.0)))
+    l89 = np_div(k2, np_div(k1, radiance + F.lit(1.0)))
+    return l5, l89
+
+
 def thermal_band_index(n_bands: Column, base: int = 0) -> Column:
     """The sensor→thermal-band mapping, single source of truth
     (data_processor.py:109/102: L5 band 6, L8/9 band 10). ``base=0``
@@ -117,19 +128,16 @@ def to_brightness_temperature(df: DataFrame, out: str = "bt_bands") -> DataFrame
     k1 = k_constant("thermal", "K1")
     k2 = k_constant("thermal", "K2")
 
-    _np_div = np_div
-
     def band_expr(grid: Column, i: Column) -> Column:
         ml = coeff("rescaling", "RADIANCE_MULT_BAND_", i + 1)
         al = coeff("rescaling", "RADIANCE_ADD_BAND_", i + 1)
         radiance = lambda px: px.cast("double") * ml + al  # noqa: E731
-        bt_l89 = lambda px: _np_div(  # noqa: E731
-            k2, _np_div(k1, radiance(px) + F.lit(1.0))
-        )
-
-        bt_l5 = lambda px: _np_div(  # noqa: E731
-            k2, np_ln(_np_div(k1, radiance(px)) + F.lit(1.0))
-        )
+        bt_l5 = lambda px: brightness_temperatures(  # noqa: E731
+            radiance(px), k1, k2
+        )[0]
+        bt_l89 = lambda px: brightness_temperatures(  # noqa: E731
+            radiance(px), k1, k2
+        )[1]
         return F.when(
             i == thermal_idx,
             F.when(

@@ -32,6 +32,14 @@ from ..sources import landsat
 from ..util import persist_tracked
 from ..sources.landsat import FIXTURE_DIR
 from .text import _TOKS_SQL
+
+# The assembled feature frame is shared with the domain suite:
+# domain.features_with_gt memoizes it per session and persists it, so
+# aug_explode_4x / map_concat_features / domain_pipeline_summary scan
+# one cached materialization per session instead of each rebuilding
+# the 365-array assembly. That holds only while the frame's cache
+# entry survives (see the ordering note at domain._FEATURES_MEMO);
+# tests/test_domain_cache.py pins the InMemoryTableScan in each plan.
 from .domain import (
     _GT1,
     _META,
@@ -46,11 +54,6 @@ from .domain import (
 GRID = 7
 IMG_LEN = GRID * GRID * GRID  # 343
 VARIANTS = ["orig", "rot90", "rot180", "rot270"]
-
-# Earth mean radius in meters (haversine replaces executor-side geopy,
-# data_augmentation.py:69-99 — geodesic isn't available as JVM math).
-EARTH_R_M = 6371008.8
-
 
 # ---------------------------------------------------------------------------
 # Rotation as index arithmetic (data_augmentation.py:12-29, np.rot90 CCW
@@ -161,25 +164,14 @@ def jitter_date(day: Column, month: Column, seed: int) -> tuple[Column, Column]:
     return new_day, new_month
 
 
-def _meters_per_degree(lat: Column) -> tuple[Column, Column]:
-    """Haversine meters for 1° of longitude (at this latitude) and 1°
-    of latitude — the JVM-native stand-in for geopy.geodesic
-    (data_augmentation.py:69-99)."""
-    half_deg = F.radians(F.lit(0.5))
-    lon_m = 2.0 * EARTH_R_M * F.asin(F.cos(F.radians(lat)) * F.sin(half_deg))
-    lat_m = 2.0 * EARTH_R_M * F.asin(F.sin(half_deg))
-    return lon_m, lat_m
-
-
 def _wgs84_deg_meters_cols(lat: Column) -> tuple[Column, Column]:
     """Exact WGS-84 meters-per-degree (Vincenty inverse, matching the
     reference's geopy calls — data_augmentation.py:69-99) as ONE
     Arrow-batched pandas UDF over the latitude column. Python is
     acceptable here because the only consumer evaluates it on the
-    stations DIMENSION (hundreds of rows at any fact scale); the
-    spherical JVM expression (_meters_per_degree) remains the
-    fact-scale fallback. Both getFields reference the same UDF
-    expression, which ExtractPythonUDFs deduplicates to one eval."""
+    stations DIMENSION (hundreds of rows at any fact scale). Both
+    getFields reference the same UDF expression, which
+    ExtractPythonUDFs deduplicates to one eval."""
     from pyspark.sql.functions import pandas_udf
 
     def _kernel(lat_s):
@@ -217,16 +209,6 @@ def jitter_geo(
 # aug queries go through the `features` column on purpose, proving the
 # layout contract).
 # ---------------------------------------------------------------------------
-
-
-# The assembled feature frame is shared with the domain suite:
-# domain.features_with_gt memoizes it per session and persists it, so
-# aug_explode_4x / map_concat_features / domain_pipeline_summary scan
-# one cached materialization per session instead of each rebuilding
-# the 365-array assembly. That holds only while the frame's cache
-# entry survives (see the ordering note at domain._FEATURES_MEMO);
-# tests/test_domain_cache.py pins the InMemoryTableScan in each plan.
-_features_with_gt = features_with_gt
 
 
 # ---------------------------------------------------------------------------
@@ -276,7 +258,7 @@ def aug_explode_4x(spark: SparkSession, sf: str) -> DataFrame:
     multiset, so a plain sum would pass even with wrong indexes; the
     position weights catch that) — while the random jitters live in
     the rows-only queries."""
-    feat = _features_with_gt(spark)
+    feat = features_with_gt(spark)
 
     # Rotation-as-permutation: the checksum Σ out[q]·q over the rotated
     # image equals Σ v[p]·w_k(p) over the ORIGINAL flat layout, where
@@ -1218,7 +1200,7 @@ QUERIES: dict[str, QuerySpec] = {
     "sample_source_mix": QuerySpec(
         "sample_source_mix", sample_source_mix, _SOURCE_MIX_SQL
     ),
-    # round-8 addition (fronted in registry._ROUND8_FRONT on arrival)
+    # round-8 addition
     "sample_weighted": QuerySpec(
         "sample_weighted", sample_weighted, _WEIGHTED_SQL
     ),
@@ -1228,13 +1210,13 @@ QUERIES: dict[str, QuerySpec] = {
         sample_shuffle_deterministic,
         _SHUFFLE_DET_SQL,
     ),
-    # round-9 addition (fronted in registry._ROUND9_FRONT on arrival)
+    # round-9 addition
     "sample_negative_pairs": QuerySpec(
         "sample_negative_pairs",
         sample_negative_pairs,
         _NEGATIVES_SQL,
     ),
-    # round-12 second-wave addition (fronted in _ROUND12_FRONT)
+    # round-12 second-wave addition
     "sample_temperature": QuerySpec(
         "sample_temperature", sample_temperature, _TEMPERATURE_SQL
     ),

@@ -778,7 +778,7 @@ def _minhash_sig(docs: DataFrame) -> DataFrame:
     Shape (r14, VERDICT r13 item 2): an Arrow-batched vectorized
     numpy kernel — the (n_tokens × 256) mult-add-mod lattice is BLAS-
     shaped integer math, and the measured A/B at sf0.1
-    (tools/r14_mh_ab.py) reads 0.88 s vs 3.87 s for the explode +
+    (round-14 A/B, NOTES.md) reads 0.88 s vs 3.87 s for the explode +
     256-column MIN hash-aggregate it replaces (4.4×; HOF fold/array
     variants were 1.5–2× SLOWER than the aggregate — interpreted
     lambdas). Exactness: everything is int64 with every intermediate
@@ -916,7 +916,7 @@ def ext_dedup_near(spark: SparkSession, sf: str) -> DataFrame:
     2. per-doc MinHash signature = the _minhash_sig vectorized numpy
        kernel — a per-row Arrow-batched map, 4.4× the old explode +
        256-column MIN aggregate and one doc_id shuffle cheaper (A/B
-       in tools/r14_mh_ab.py, value-identical);
+       recorded in NOTES.md round 14, value-identical);
     3. band keys: md5-long over each band's ':'-joined 4 signature
        rows → 64 longs (8-byte join keys — the 32-char md5 STRING key
        variant measured 26 s vs 5.9 s warm at sf0.1, the string
@@ -2534,6 +2534,408 @@ FROM scored WHERE lev * {mult} <= mx
 """.format(prefix=_EDIT_PREFIX, mult=_EDIT_SIM_MULT)
 
 
+# ---------------------------------------------------------------------------
+# Curation stages. The nine llm_data_pipeline variants are ordered
+# lists of these stages, all run by _run_stages and closed by
+# one of two tails: the chunk summary (v1, v2) or the per-source funnel
+# (v4-v9). A stage maps (spark, sf, docs) → docs: a row filter over the
+# running (doc_id, source, text, …) frame. Only _entropy_floor (adds
+# n_tokens, entropy) and _dsir_select (adds log_weight) add columns.
+# Every stage is an already-oracled operator; the composed oracles
+# (_PIPELINE_SQL, _V4_SQL, _v5_sql, _v67_sql) chain the same CTEs.
+# ---------------------------------------------------------------------------
+
+
+def _url_dedup(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """dedup_url_grain's keep-best-per-canonical-address set."""
+    dups = _url_ranked(spark, sf).where(F.col("_rn") > 1).select("doc_id")
+    return docs.join(dups, "doc_id", "left_anti")
+
+
+def _domain_prefilter(
+    spark: SparkSession, sf: str, docs: DataFrame
+) -> DataFrame:
+    """Drop whole sources whose canonical-fingerprint dup rate exceeds
+    0.055 (text_domain_rollup's flag_high_dup at the pipeline grain)."""
+    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
+    dup_rate = 1.0 - F.countDistinct("f").cast("double") / F.count(F.lit(1))
+    flagged = (
+        docs.select("source", fp.alias("f"))
+        .groupBy("source")
+        .agg(F.round(dup_rate + 1e-9, 4).alias("dr"))
+        .where(F.col("dr") > 0.055)
+        .select("source")
+    )
+    return docs.join(F.broadcast(flagged), "source", "left_anti")
+
+
+def _exact_dedup(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """Keep the lowest doc_id per md5(text) (ext_dedup_exact's keeper)."""
+    keep = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
+    return docs.join(keep.select("doc_id"), "doc_id", "left_semi")
+
+
+def _holdout(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """Drop the doc_id % 10 = 0 eval slice: eval never enters training."""
+    from .text import _EVAL_PRED
+
+    return docs.where(~F.expr(_EVAL_PRED))
+
+
+def _quality_gate(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """text_quality.passes_quality = 1."""
+    from .text import text_quality
+
+    ok = text_quality(spark, sf).where(F.col("passes_quality") == 1)
+    return docs.join(ok.select("doc_id"), "doc_id", "left_semi")
+
+
+def _repetition_gate(
+    spark: SparkSession, sf: str, docs: DataFrame
+) -> DataFrame:
+    """text_repetition.is_repetitive = false."""
+    from .text import text_repetition
+
+    ok = text_repetition(spark, sf).where(~F.col("is_repetitive"))
+    return docs.join(ok.select("doc_id"), "doc_id", "left_semi")
+
+
+def _boilerplate_drop(
+    spark: SparkSession, sf: str, docs: DataFrame
+) -> DataFrame:
+    """Drop docs whose RefinedWeb chunk-grain duplicated fraction
+    exceeds 0.3 (dedup_paragraph's keep_doc = 0 list, computed on the
+    raw corpus as a production pass would precompute it)."""
+    bad = dedup_paragraph(spark, sf).where(F.col("keep_doc") == 0)
+    return docs.join(bad.select("doc_id"), "doc_id", "left_anti")
+
+
+def _entropy_floor(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """Token-distribution Shannon entropy ≥ 4.0 bits AND ≥ 20 tokens
+    (text_entropy's shape), adding n_tokens and entropy.
+
+    Entropy is a PER-ROW array expression: one array_sort (O(L log L))
+    and a run-length fold over the sorted tokens (O(L)) accumulating
+    Σ c·log2 c — no token explode, no shuffle, no join back. The
+    (token, count) multiset is the oracle's, so only the float
+    accumulation order differs from its hash aggregate, which the 6dp
+    rounding absorbs (the established cross-engine tolerance)."""
+
+    def close(acc):
+        # a closed run of length c adds c·log2 c (0 for the empty start)
+        run = acc["run"]
+        return F.when(run > 0.0, run * F.log2(run)).otherwise(F.lit(0.0))
+
+    def step(acc, x):
+        return F.when(
+            x == acc["prev"],
+            F.struct(
+                x.alias("prev"),
+                (acc["run"] + 1.0).alias("run"),
+                acc["clog"].alias("clog"),
+            ),
+        ).otherwise(
+            F.struct(
+                x.alias("prev"),
+                F.lit(1.0).alias("run"),
+                (acc["clog"] + close(acc)).alias("clog"),
+            )
+        )
+
+    start = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0.0).alias("run"),
+        F.lit(0.0).alias("clog"),
+    )
+    clog = F.aggregate(
+        F.array_sort(TOKENS()), start, step, lambda a: a["clog"] + close(a)
+    )
+    entropy = F.log2("n_tokens") - clog / F.col("n_tokens")
+    return (
+        docs.withColumn("n_tokens", F.size(TOKENS()).cast("long"))
+        .withColumn("entropy", F.round(entropy + 1e-9, 6))
+        .where((F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20))
+    )
+
+
+def _containment_scrub(
+    spark: SparkSession, sf: str, docs: DataFrame
+) -> DataFrame:
+    """Drop any doc ≥ 0.8-CONTAINED in a larger same-source doc (the
+    dedup_containment_asym one-sided prefix join, so quote-inside-
+    article shells go even at jaccard ≪ 0.4); ties on size keep the
+    lower doc_id."""
+    toks = F.array_distinct(F.transform(TOKENS(), _md5_long))
+    hashed = docs.select("doc_id", "source", toks.alias("toks")).withColumn(
+        "sz", F.size("toks")
+    )
+    pairs = _asym_containment_candidates(hashed, 7999, 10000)
+    inter = F.col("inter").cast("double") / F.col("sz_a").cast("double")
+    larger = (F.col("sz_b") > F.col("sz_a")) | (
+        (F.col("sz_b") == F.col("sz_a")) & (F.col("doc_b") < F.col("doc_a"))
+    )
+    drops = (
+        pairs.where((F.round(inter + 1e-9, 4) >= 0.8) & larger)
+        .select(F.col("doc_a").alias("doc_id"))
+        .distinct()
+    )
+    return docs.join(drops, "doc_id", "left_anti")
+
+
+def _semantic_dedup(
+    spark: SparkSession, sf: str, docs: DataFrame
+) -> DataFrame:
+    """Drop SemDeDup casualties (dedup_semdedup, doc_id = vec_id); docs
+    without an embedding row pass through."""
+    from .similarity import dedup_semdedup
+
+    drops = dedup_semdedup(spark, sf).select(F.col("vec_id").alias("doc_id"))
+    return docs.join(drops, "doc_id", "left_anti")
+
+
+def _decontam(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """Drop docs within cosine 0.35 of an eval embedding
+    (sim_semantic_decontam's drop list)."""
+    from .similarity import sim_semantic_decontam
+
+    drops = sim_semantic_decontam(spark, sf).select("doc_id")
+    return docs.join(drops, "doc_id", "left_anti")
+
+
+def _dsir_select(spark: SparkSession, sf: str, docs: DataFrame) -> DataFrame:
+    """Keep the top ⌈n/2⌉ docs by text_dsir_weight's log_weight
+    (doc_id tiebreak), ranked with the distributed util.global_prefix,
+    never a single-partition window; adds log_weight."""
+    from ..util import global_prefix
+    from .text import text_dsir_weight
+
+    w = text_dsir_weight(spark, sf).select("doc_id", "log_weight")
+    scored = docs.join(w, "doc_id").withColumn("_negw", -F.col("log_weight"))
+    return (
+        global_prefix(scored, ["_negw", "doc_id"])
+        .where(F.col("_prefix") <= F.expr("(_total + 1) DIV 2"))
+        .drop("_negw", "_prefix", "_total")
+    )
+
+
+def _lazy(df: DataFrame) -> DataFrame:
+    return df
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint()
+
+
+# Stage lists: (funnel column, stage, cut). The last entry's output is
+# the kept set. The cut is where a stage's output is materialized:
+# - persist_tracked where several later layers re-read a frame (the
+#   funnel counts and the next stage);
+# - localCheckpoint from semantic dedup down, and on the URL stage at
+#   the head (the dedup_clusters rule: cut lineage where lineage itself
+#   is the pathology). With persists there, every layer's
+#   InMemoryRelation PRINTS its whole cached subtree, and AQE
+#   regenerates the explain string on every adaptive update: 2.9 MB of
+#   plan text and ~100 s of driver CPU at sf0.001, and v8 took 23.0 s
+#   persisted vs 10.2 s checkpointed at sf0.1. The checkpoints flatten
+#   the tail to LogicalRDD leaves (~0.3 s per action). They are
+#   LINEAGE-NON-RECOVERABLE: an executor lost mid-job fails the job
+#   instead of recomputing (for a must-survive-executor-loss
+#   deployment, switch them to a reliable checkpoint() on a
+#   cluster-visible dir);
+# - _lazy (no cut) where one consumer reads the frame: v1/v2's gates
+#   plan into one job with their tail (v3 persists its gated base
+#   itself), and v4/v5's kept set feeds only the kept aggregate.
+_V1_STAGES = [
+    ("n_after_exact", _exact_dedup, _lazy),
+    ("n_kept", _quality_gate, _lazy),
+]
+_V2_STAGES = [
+    ("n_after_exact", _exact_dedup, _lazy),
+    ("n_after_holdout", _holdout, _lazy),
+    ("n_after_text_quality", _quality_gate, _lazy),
+    ("n_kept", _repetition_gate, _lazy),
+]
+_V3_GATES = [
+    ("n_after_holdout", _holdout, _lazy),
+    ("n_after_text_quality", _quality_gate, _lazy),
+    ("n_after_repetition", _repetition_gate, _lazy),
+]
+_V4_STAGES = [
+    ("n_after_exact", _exact_dedup, persist_tracked),
+    ("n_after_quality", _entropy_floor, persist_tracked),
+    ("n_kept", _containment_scrub, _lazy),
+]
+_V5_STAGES = [
+    ("n_after_domain", _domain_prefilter, persist_tracked),
+    ("n_after_exact", _exact_dedup, persist_tracked),
+    ("n_after_quality", _entropy_floor, persist_tracked),
+    ("n_after_containment", _containment_scrub, persist_tracked),
+    ("n_kept", _semantic_dedup, _lazy),
+]
+_V6_STAGES = [
+    ("n_after_domain", _domain_prefilter, persist_tracked),
+    ("n_after_exact", _exact_dedup, persist_tracked),
+    ("n_after_boilerplate", _boilerplate_drop, persist_tracked),
+    ("n_after_quality", _entropy_floor, persist_tracked),
+    ("n_after_containment", _containment_scrub, persist_tracked),
+    ("n_after_semantic", _semantic_dedup, _checkpoint),
+    ("n_kept", _dsir_select, _checkpoint),
+]
+_V7_STAGES = [
+    *_V6_STAGES[:-1],
+    ("n_after_decontam", _decontam, _checkpoint),
+    _V6_STAGES[-1],
+]
+_V8_STAGES = [
+    ("n_after_url", _url_dedup, _checkpoint),
+    *_V7_STAGES,
+]
+
+
+def _run_stages(spark: SparkSession, sf: str, stages: list) -> list:
+    """Run a curation variant's ordered stage list over the
+    documents table, cutting each stage's output as its entry says.
+    Returns every layer as (name, frame): raw documents first
+    ("n_raw"), the kept set last."""
+    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
+    layers = [("n_raw", docs)]
+    for name, stage, cut in stages:
+        layers.append((name, cut(stage(spark, sf, layers[-1][1]))))
+    return layers
+
+
+def _packed(layers: list) -> DataFrame:
+    """v1/v2 tail: the kept set's sequence-packing chunk summary."""
+    n_tok = F.size(TOKENS()).alias("n_tok")
+    return _chunk_summary(layers[-1][1].select("doc_id", n_tok))
+
+
+def _funnel(layers: list, per_source: DataFrame, tail_cols: list) -> DataFrame:
+    """v4-v9 tail: the per-source funnel. Every layer but the kept one
+    is counted in ONE union of (source, layer-tag) rows and one
+    map-side-combinable conditional aggregate (1 exchange, no joins;
+    one aggregate per layer met in a left-join chain cost v8 9
+    exchanges and 8 joins). A source absent from a layer counts 0, as
+    the oracle's LEFT JOIN + COALESCE(…, 0) does: every layer is a
+    subset of the raw docs, so the union's sources are the raw ones.
+    ``per_source`` carries n_kept and kept_tokens beside the columns
+    ``tail_cols`` reads."""
+    from functools import reduce
+
+    counted = layers[:-1]
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            df.select("source", F.lit(i).alias("_st"))
+            for i, (_, df) in enumerate(counted)
+        ],
+    )
+    counts = tagged.groupBy("source").agg(
+        *[
+            F.count(F.when(F.col("_st") == i, 1)).alias(name)
+            for i, (name, _) in enumerate(counted)
+        ]
+    )
+    zeroed = [name for name, _ in counted[1:]] + ["n_kept", "kept_tokens"]
+    return counts.join(per_source, "source", "left").select(
+        "source",
+        "n_raw",
+        *[F.coalesce(c, F.lit(0)).alias(c) for c in zeroed],
+        *tail_cols,
+    )
+
+
+def _entropy_tail(layers: list) -> DataFrame:
+    """v4/v5 tail: kept count, token mass and mean entropy per source."""
+    kept_n = layers[-1][1].groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.sum("n_tokens").alias("kept_tokens"),
+        F.round(F.avg("entropy") + 1e-9, 4).alias("mean_entropy_kept"),
+    )
+    return _funnel(layers, kept_n, ["mean_entropy_kept"])
+
+
+def _mixture(kept: DataFrame) -> DataFrame:
+    """v6-v9 per-source frame: kept count, token mass and mean DSIR
+    weight, plus the temperature-mix terms p (token share), w = p^0.3
+    and z = Σw, computed only over sources with kept docs (so p > 0)."""
+    kept_n = (
+        kept.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_kept"),
+            F.sum("n_tokens").alias("kept_tokens"),
+            F.round(F.avg("log_weight") + 1e-9, 4).alias("mean_dsir_kept"),
+        )
+        .localCheckpoint()
+    )
+    tot = kept_n.agg(F.sum("kept_tokens").alias("tot"))
+    p = F.col("kept_tokens").cast("double") / F.col("tot").cast("double")
+    shares = persist_tracked(
+        kept_n.crossJoin(F.broadcast(tot)).select(
+            "source", p.alias("p"), F.pow(p, 0.3).alias("w")
+        )
+    )
+    z = shares.agg(F.sum("w").alias("z"))
+    return kept_n.join(shares.crossJoin(F.broadcast(z)), "source", "left")
+
+
+def _mix_cols() -> list:
+    q = F.col("w") / F.col("z")
+    return [
+        "mean_dsir_kept",
+        F.round(q + 1e-9, 6).alias("q_temp"),
+        F.round(q / F.col("p") + 1e-9, 4).alias("boost"),
+    ]
+
+
+def _epoch_cols() -> list:
+    # tokens_epoch_budget over the KEPT token mass: budget = 4× kept
+    # mass (Muennighoff repeat ceiling), compared on the ROUNDED epochs
+    e = F.round(F.lit(4.0) * F.col("w") / F.col("z") / F.col("p") + 1e-9, 4)
+    return [e.alias("epochs_at_4x"), (e > 4.0).alias("over_repeat")]
+
+
+def _mix_tail(layers: list) -> DataFrame:
+    """v6/v7 tail: the temperature mixture over the kept token mass."""
+    return _funnel(layers, _mixture(layers[-1][1]), _mix_cols())
+
+
+def _epoch_tail(layers: list) -> DataFrame:
+    """v8 tail: the mixture plus the epoch-budget columns."""
+    cols = _mix_cols() + _epoch_cols()
+    return _funnel(layers, _mixture(layers[-1][1]), cols)
+
+
+def _bpe_tail(layers: list) -> DataFrame:
+    """v9 tail: v8's, plus a BPE vocabulary induced ON the kept corpus
+    and each source's kept token mass re-expressed in subword symbols."""
+    from .text import _BPE_VOCAB_ROUNDS, _bpe_arr, _bpe_state_after_from
+
+    kept = layers[-1][1]
+    state = _bpe_state_after_from(kept, _BPE_VOCAB_ROUNDS)
+    syms = state.select("word", F.size(_bpe_arr()).cast("long").alias("n_syms"))
+    words = (
+        kept.select("source", F.explode(TOKENS()).alias("word"))
+        .where(F.col("word") != "")
+        .groupBy("source", "word")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    n_syms = F.sum(F.col("c") * F.col("n_syms"))
+    bpe_n = (
+        words.join(syms, "word")
+        .groupBy("source")
+        .agg(n_syms.alias("bpe_symbols_kept"), F.sum("c").alias("_bt"))
+    )
+    per_tok = F.col("bpe_symbols_kept").cast("double") / F.col("_bt")
+    cols = _mix_cols() + _epoch_cols()
+    cols += [
+        F.coalesce("bpe_symbols_kept", F.lit(0)).alias("bpe_symbols_kept"),
+        F.round(per_tok + 1e-9, 6).alias("bpe_symbols_per_token"),
+    ]
+    per_source = _mixture(kept).join(bpe_n, "source", "left")
+    return _funnel(layers, per_source, cols)
+
+
 def llm_data_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """The end-to-end training-data preparation pipeline as ONE
     composed query — the shape a real corpus build runs nightly:
@@ -2549,21 +2951,7 @@ def llm_data_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     between stages — Catalyst plans the whole pipeline as one job, and
     the dedup/quality predicates get evaluated in the same scan pass
     where possible). The oracle chains the same CTEs."""
-    from .text import text_quality
-
-    quality_ids = (
-        text_quality(spark, sf)
-        .where(F.col("passes_quality") == 1)
-        .select("doc_id")
-    )
-    keepers = ext_dedup_exact(spark, sf).select(
-        F.col("keeper_doc_id").alias("doc_id")
-    )
-    docs = table(spark, sf, "documents").select(
-        "doc_id", F.size(TOKENS()).alias("n_tok")
-    )
-    survivors = docs.join(quality_ids, "doc_id").join(keepers, "doc_id")
-    return _chunk_summary(survivors)
+    return _packed(_run_stages(spark, sf, _V1_STAGES))
 
 
 _PIPELINE_SQL = """
@@ -2598,32 +2986,7 @@ def llm_data_pipeline_v2(spark: SparkSession, sf: str) -> DataFrame:
     Each gate is an already-oracled operator; the composed oracle
     chains the same CTEs, so stage-disagreement (e.g. tokenizer drift
     between the repetition filter and the packer) breaks the hash."""
-    from .text import text_quality, text_repetition
-
-    quality_ids = (
-        text_quality(spark, sf)
-        .where(F.col("passes_quality") == 1)
-        .select("doc_id")
-    )
-    non_repetitive = (
-        text_repetition(spark, sf)
-        .where(~F.col("is_repetitive"))
-        .select("doc_id")
-    )
-    keepers = ext_dedup_exact(spark, sf).select(
-        F.col("keeper_doc_id").alias("doc_id")
-    )
-    docs = (
-        table(spark, sf, "documents")
-        .where(F.expr("doc_id % 10 != 0"))
-        .select("doc_id", F.size(TOKENS()).alias("n_tok"))
-    )
-    survivors = (
-        docs.join(quality_ids, "doc_id")
-        .join(non_repetitive, "doc_id")
-        .join(keepers, "doc_id")
-    )
-    return _chunk_summary(survivors)
+    return _packed(_run_stages(spark, sf, _V2_STAGES))
 
 
 def llm_data_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
@@ -2654,100 +3017,12 @@ def llm_data_pipeline_v4(spark: SparkSession, sf: str) -> DataFrame:
     shows its row (zeros, NULL mean), which is exactly what a corpus
     curator needs to see.
 
-    Scale shape: one md5 dedup shuffle, one token wordcount + per-doc
-    aggregate (entropy), the asym-containment candidate join (linear
+    Scale shape: one md5 dedup shuffle, a per-row entropy fold (no
+    token shuffle), the asym-containment candidate join (linear
     token-index shuffle, bounded broadcast), one anti join, and
     per-source aggregates. Nothing corpus-sized broadcasts; no
     windows over raw docs."""
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    keep1 = docs.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        docs.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    tok = d1.select("doc_id", F.explode(TOKENS()).alias("tok"))
-    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    ent = cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clog"),
-    )
-    ent = ent.select(
-        "doc_id",
-        "n_tokens",
-        F.round(
-            F.log2("n_tokens") - F.col("_clog") / F.col("n_tokens") + 1e-9, 6
-        ).alias("entropy"),
-    )
-    d2 = persist_tracked(
-        d1.join(ent, "doc_id").where(
-            (F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20)
-        )
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    drops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept = d2.join(drops, "doc_id", "left_anti")
-    # funnel counts in ONE union-pass — see _pipeline_v67's count
-    # block for the rationale (optimization r16, VERDICT r15 item 5)
-    from functools import reduce
-
-    layers = [
-        (docs, "n_raw"),
-        (d1, "n_after_exact"),
-        (d2, "n_after_quality"),
-    ]
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tokens").alias("kept_tokens"),
-        F.round(F.avg("entropy") + 1e-9, 4).alias("mean_entropy_kept"),
-    )
-    return (
-        counts.join(kept_n, "source", "left")
-        .select(
-            "source",
-            "n_raw",
-            F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-            F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-            "mean_entropy_kept",
-        )
-    )
+    return _entropy_tail(_run_stages(spark, sf, _V4_STAGES))
 
 
 _V4_SQL = """
@@ -2841,128 +3116,12 @@ def llm_data_pipeline_v5(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: the domain flag is one fingerprint aggregate
     (|domains| rows, broadcast back); then v4's shuffles (md5 dedup,
-    token wordcount, asym-containment candidate join, anti join);
+    per-row entropy, asym-containment candidate join, anti join);
     the semantic drop list is cell-blocked pairs over the embedding
     table (n²/(2·k_cells), √n-cell sizing at production — see
     dedup_semdedup) anti-joined on doc_id. Nothing corpus-sized
     broadcasts."""
-    from .similarity import dedup_semdedup
-
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
-    flagged = (
-        docs.select("source", fp.alias("f"))
-        .groupBy("source")
-        .agg(
-            F.round(
-                1.0
-                - F.countDistinct("f").cast("double") / F.count(F.lit(1))
-                + 1e-9,
-                4,
-            ).alias("dr")
-        )
-        .where(F.col("dr") > 0.055)
-        .select("source")
-    )
-    d0 = persist_tracked(docs.join(F.broadcast(flagged), "source", "left_anti"))
-    keep1 = d0.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        d0.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    tok = d1.select("doc_id", F.explode(TOKENS()).alias("tok"))
-    cnt = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
-    ent = cnt.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.sum(F.col("c").cast("double") * F.log2("c")).alias("_clog"),
-    )
-    ent = ent.select(
-        "doc_id",
-        "n_tokens",
-        F.round(
-            F.log2("n_tokens") - F.col("_clog") / F.col("n_tokens") + 1e-9, 6
-        ).alias("entropy"),
-    )
-    d2 = persist_tracked(
-        d1.join(ent, "doc_id").where(
-            (F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20)
-        )
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    cdrops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept_c = persist_tracked(d2.join(cdrops, "doc_id", "left_anti"))
-    sem_drops = dedup_semdedup(spark, sf).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    kept = kept_c.join(sem_drops, "doc_id", "left_anti")
-    # funnel counts in ONE union-pass — see _pipeline_v67's count
-    # block for the rationale (optimization r16, VERDICT r15 item 5)
-    from functools import reduce
-
-    layers = [
-        (docs, "n_raw"),
-        (d0, "n_after_domain"),
-        (d1, "n_after_exact"),
-        (d2, "n_after_quality"),
-        (kept_c, "n_after_containment"),
-    ]
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = kept.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.sum("n_tokens").alias("kept_tokens"),
-        F.round(F.avg("entropy") + 1e-9, 4).alias("mean_entropy_kept"),
-    )
-    return (
-        counts.join(kept_n, "source", "left")
-        .select(
-            "source",
-            "n_raw",
-            F.coalesce("n_after_domain", F.lit(0)).alias("n_after_domain"),
-            F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-            F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-            F.coalesce("n_after_containment", F.lit(0)).alias(
-                "n_after_containment"
-            ),
-            F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-            F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-            "mean_entropy_kept",
-        )
-    )
+    return _entropy_tail(_run_stages(spark, sf, _V5_STAGES))
 
 
 def _v5_sql() -> str:
@@ -3133,12 +3292,12 @@ def llm_data_pipeline_v6(spark: SparkSession, sf: str) -> DataFrame:
     RECOVERABLE — an executor lost while this job runs FAILS the job
     (resubmit it) instead of recomputing the lost partitions, because
     a localCheckpoint's blocks live only on the executors that wrote
-    them. That is the price of the explain-string fix below; for a
-    batch corpus build a rerun is acceptable, for a must-survive-
-    executor-loss deployment switch the three cuts to
-    reliable checkpoint() on a cluster-visible checkpoint dir (same
-    semantics, adds an HDFS/S3 write)."""
-    return _pipeline_v67(spark, sf, with_decontam=False)
+    them. That is the price of the explain-string fix noted above the
+    stage lists (_V1_STAGES); for a batch corpus build a rerun is
+    acceptable, for a must-survive-executor-loss deployment switch the
+    three cuts to reliable checkpoint() on a cluster-visible
+    checkpoint dir (same semantics, adds an HDFS/S3 write)."""
+    return _mix_tail(_run_stages(spark, sf, _V6_STAGES))
 
 
 def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
@@ -3157,7 +3316,7 @@ def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
     Funnel gains one column (n_after_decontam, between
     n_after_semantic and n_kept); everything else — stages, oracle
     discipline, localCheckpoint failure-mode trade — is v6's, shared
-    via _pipeline_v67 so the two keys cannot drift apart. The
+    via the shared stage list so the two keys cannot drift apart. The
     composed oracle embeds sim_semantic_decontam's FULL published SQL
     as a subquery (compose-don't-copy).
 
@@ -3171,7 +3330,7 @@ def llm_data_pipeline_v7(spark: SparkSession, sf: str) -> DataFrame:
     structural tests cover by certifying sim_semantic_decontam's own
     drop list brute-force (test_curation_r13). All other margins
     inherited from v6."""
-    return _pipeline_v67(spark, sf, with_decontam=True)
+    return _mix_tail(_run_stages(spark, sf, _V7_STAGES))
 
 
 def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
@@ -3198,7 +3357,7 @@ def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
     Funnel gains n_after_url (between n_raw and n_after_domain) and
     the two epoch columns; everything else — stages, compose-don't-
     copy oracle discipline, localCheckpoint failure-mode trade — is
-    v7's, shared via _pipeline_v67 so the three variants cannot
+    v7's, shared via the stage lists so the three variants cannot
     drift. The composed oracle embeds the _url_ranked_ctes_sql block
     (which itself embeds text_bigram_lm_score's published SQL) and
     the epoch formula verbatim.
@@ -3211,7 +3370,7 @@ def llm_data_pipeline_v8(spark: SparkSession, sf: str) -> DataFrame:
     boundary-dependent); epoch margins inherit tokens_epoch_budget's
     audit (over_repeat both-verdict split measured 9/11 of 20 at
     sf0.01 on the kept mass). All other margins inherited from v7."""
-    return _pipeline_v67(spark, sf, with_decontam=True, with_url_stage=True)
+    return _epoch_tail(_run_stages(spark, sf, _V8_STAGES))
 
 
 def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
@@ -3228,7 +3387,7 @@ def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
 
     Funnel gains those two columns; everything else — stages,
     compose-don't-copy oracle discipline, localCheckpoint trades — is
-    v8's, shared via _pipeline_v67 so the four variants cannot drift.
+    v8's (same stage list, _V8_STAGES) so the four variants cannot drift.
     The composed oracle splices text.py's BPE head/round CTE blocks
     (the same templates text_bpe_vocab/text_bpe_encode compose from)
     with the induction head re-pointed at the kept CTE.
@@ -3242,353 +3401,7 @@ def llm_data_pipeline_v9(spark: SparkSession, sf: str) -> DataFrame:
     sf. Oracle note: the kept CTE is MATERIALIZED — DuckDB otherwise
     inlines the whole funnel into each of the BPE tail's three
     references (89.7 s → 7.5 s at sf0.01, values identical)."""
-    return _pipeline_v67(
-        spark,
-        sf,
-        with_decontam=True,
-        with_url_stage=True,
-        with_bpe_tail=True,
-    )
-
-
-def _pipeline_v67(
-    spark: SparkSession,
-    sf: str,
-    with_decontam: bool,
-    with_url_stage: bool = False,
-    with_bpe_tail: bool = False,
-) -> DataFrame:
-    from .similarity import dedup_semdedup, sim_semantic_decontam
-    from .text import text_dsir_weight
-
-    docs = table(spark, sf, "documents").select("doc_id", "source", "text")
-    if with_url_stage:
-        # v8 stage 0 — URL-grain keep-best dedup BEFORE any text
-        # statistic: the domain dup-ratio flagging below runs on the
-        # post-URL corpus (a mirror crawled twice must not count
-        # toward its source's dup ratio), which is why the stage is
-        # spliced here rather than anti-joined at the tail.
-        # localCheckpoint, NOT persist (the funnel-tail rule applied
-        # at the head): a persisted base ABOVE the whole funnel puts
-        # its InMemoryRelation — whose subtree now contains the
-        # canon-URL window + the bigram-LM aggregates — into every
-        # funnel layer's printed plan, and AQE's explain-string
-        # regeneration turned that into driver CPU: v8 measured
-        # 23.0 s persisted vs 10.2 s checkpointed at sf0.1 (warm,
-        # same machine, back-to-back). Same lineage-non-recoverable
-        # trade as the three tail cuts, documented in v6's docstring.
-        url_dups = _url_ranked(spark, sf).where(F.col("_rn") > 1).select(
-            "doc_id"
-        )
-        base = docs.join(url_dups, "doc_id", "left_anti").localCheckpoint()
-    else:
-        base = docs
-    fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(TOKENS()))))
-    flagged = (
-        base.select("source", fp.alias("f"))
-        .groupBy("source")
-        .agg(
-            F.round(
-                1.0
-                - F.countDistinct("f").cast("double") / F.count(F.lit(1))
-                + 1e-9,
-                4,
-            ).alias("dr")
-        )
-        .where(F.col("dr") > 0.055)
-        .select("source")
-    )
-    d0 = persist_tracked(base.join(F.broadcast(flagged), "source", "left_anti"))
-    keep1 = d0.groupBy(F.md5("text")).agg(F.min("doc_id").alias("doc_id"))
-    d1 = persist_tracked(
-        d0.join(keep1.select("doc_id"), "doc_id", "left_semi")
-    )
-    bad_para = (
-        dedup_paragraph(spark, sf)
-        .where(F.col("keep_doc") == 0)
-        .select("doc_id")
-    )
-    d1b = persist_tracked(d1.join(bad_para, "doc_id", "left_anti"))
-    # Per-doc token entropy as a PER-ROW array expression (optimization
-    # r15, guide §2.4): the pre-r15 shape exploded the token stream,
-    # hash-aggregated (doc, tok) counts, re-aggregated per doc, and
-    # joined the result back — two corpus-token shuffles plus a join
-    # per pipeline run. Token counts, n_tokens and the entropy formula
-    # are row-local quantities of the token array, so they fuse into
-    # the projection. Per-row cost class (optimization r16, ADVICE r15
-    # item 1): the r15 fold counted via filter-per-distinct-token —
-    # O(|distinct|·|toks|) interpreted string compares per row,
-    # quadratic on long documents. Now: ONE array_sort (O(L log L))
-    # and a run-length fold over the sorted array (O(L)) accumulating
-    # Σ c·log2 c directly — linear-log per row, never corpus-shaped.
-    # Values: identical (token, count) multiset → identical terms;
-    # only float accumulation order differs (sorted-token order vs
-    # the r15 first-occurrence order vs the oracle's hash-agg order),
-    # which the 6dp rounding absorbs — the established cross-engine
-    # tolerance (re-swept against the unchanged oracle at 2 SFs).
-    _toks_all = TOKENS()
-    _n_tokens = F.size(_toks_all).cast("long")
-
-    def _run_step(acc, x):
-        # acc = (prev token, current run length, Σ c·log2 c of closed
-        # runs); closing a run adds its c·log2 c term (log2(1) = 0
-        # terms are no-ops, same as the r15 per-distinct transform)
-        close = acc["clog"] + F.when(
-            acc["run"] > 0.0, acc["run"] * F.log2(acc["run"])
-        ).otherwise(F.lit(0.0))
-        return F.when(
-            x == acc["prev"],
-            F.struct(
-                x.alias("prev"),
-                (acc["run"] + 1.0).alias("run"),
-                acc["clog"].alias("clog"),
-            ),
-        ).otherwise(
-            F.struct(
-                x.alias("prev"), F.lit(1.0).alias("run"), close.alias("clog")
-            )
-        )
-
-    _clog = F.aggregate(
-        F.array_sort(_toks_all),
-        F.struct(
-            F.lit(None).cast("string").alias("prev"),
-            F.lit(0.0).alias("run"),
-            F.lit(0.0).alias("clog"),
-        ),
-        _run_step,
-        lambda acc: acc["clog"]
-        + F.when(acc["run"] > 0.0, acc["run"] * F.log2(acc["run"])).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    d2 = persist_tracked(
-        d1b.withColumn("n_tokens", _n_tokens)
-        .withColumn(
-            "entropy",
-            F.round(
-                F.log2("n_tokens") - _clog / F.col("n_tokens") + 1e-9, 6
-            ),
-        )
-        .where((F.col("entropy") >= 4.0) & (F.col("n_tokens") >= 20))
-    )
-    docs2 = d2.select(
-        "doc_id",
-        "source",
-        F.array_distinct(
-            F.transform(TOKENS(), _md5_long)
-        ).alias("toks"),
-    ).withColumn("sz", F.size("toks"))
-    pairs = _asym_containment_candidates(docs2, 7999, 10000)
-    containment = F.round(
-        F.col("inter").cast("double") / F.col("sz_a").cast("double") + 1e-9,
-        4,
-    )
-    cdrops = (
-        pairs.where(
-            (containment >= 0.8)
-            & (
-                (F.col("sz_b") > F.col("sz_a"))
-                | (
-                    (F.col("sz_b") == F.col("sz_a"))
-                    & (F.col("doc_b") < F.col("doc_a"))
-                )
-            )
-        )
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    kept_c = persist_tracked(d2.join(cdrops, "doc_id", "left_anti"))
-    sem_drops = dedup_semdedup(spark, sf).select(
-        F.col("vec_id").alias("doc_id")
-    )
-    # localCheckpoint, not persist, from here down (the dedup_clusters
-    # rule: cut lineage where lineage itself is the pathology). With
-    # persists, every layer's InMemoryRelation PRINTS its full cached
-    # subtree, each funnel layer is referenced twice above its
-    # relation, and AQE regenerates the explain string on every
-    # adaptive update — measured 2.9 MB of plan text and ~100 s of
-    # driver CPU in generateTreeString at sf0.001 (the string-budget
-    # cap doesn't help: the TRAVERSAL is what's combinatorial). Three
-    # cuts (kept_sem, kept, kept_n) flatten the tail to LogicalRDD
-    # leaves: 107 s → ~0.3 s per action.
-    kept_sem = kept_c.join(sem_drops, "doc_id", "left_anti").localCheckpoint()
-    if with_decontam:
-        dec_drops = sim_semantic_decontam(spark, sf).select("doc_id")
-        kept_dec = kept_sem.join(
-            dec_drops, "doc_id", "left_anti"
-        ).localCheckpoint()
-    else:
-        kept_dec = kept_sem
-    from ..util import global_prefix
-
-    dsir_w = text_dsir_weight(spark, sf).select("doc_id", "log_weight")
-    scored = kept_dec.join(dsir_w, "doc_id").withColumn(
-        "_negw", -F.col("log_weight")
-    )
-    kept = (
-        global_prefix(scored, ["_negw", "doc_id"])
-        .where(F.col("_prefix") <= F.expr("(_total + 1) DIV 2"))
-        .drop("_negw", "_prefix", "_total")
-        .localCheckpoint()
-    )
-    # Funnel counts in ONE pass (optimization r16, guide §2.3/§2.4 —
-    # VERDICT r15 item 5): the r15 shape ran NINE separate per-source
-    # count aggregates (one per funnel layer), each its own subtree +
-    # tiny exchange, meeting in a 9-deep left-join chain of broadcast
-    # builds. Every count is count-per-source of a layer frame, so one
-    # union of (source, stage-tag) rows + ONE map-side-combinable
-    # conditional aggregate computes them all: 9 exchanges + 8 joins →
-    # 1 exchange + 0 joins for the count block. Values identical:
-    # F.count(F.when(tag = i, 1)) over the union ≡ F.count(F.lit(1))
-    # per layer, and a source absent from a layer counts 0 — exactly
-    # what the old LEFT JOIN + COALESCE(…, 0) produced (every layer is
-    # a subset of docs, so the union's source set = docs' source set,
-    # the old join chain's raw_n driving side).
-    from functools import reduce
-
-    layers: list[tuple[DataFrame, str]] = [(docs, "n_raw")]
-    if with_url_stage:
-        layers.append((base, "n_after_url"))
-    layers += [
-        (d0, "n_after_domain"),
-        (d1, "n_after_exact"),
-        (d1b, "n_after_boilerplate"),
-        (d2, "n_after_quality"),
-        (kept_c, "n_after_containment"),
-        (kept_sem, "n_after_semantic"),
-    ]
-    if with_decontam:
-        layers.append((kept_dec, "n_after_decontam"))
-    tagged = reduce(
-        DataFrame.unionByName,
-        [
-            df.select("source", F.lit(i).alias("_st"))
-            for i, (df, _) in enumerate(layers)
-        ],
-    )
-    counts = tagged.groupBy("source").agg(
-        *[
-            F.count(F.when(F.col("_st") == i, 1)).alias(name)
-            for i, (_, name) in enumerate(layers)
-        ]
-    )
-    kept_n = (
-        kept.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("n_tokens").alias("kept_tokens"),
-            F.round(F.avg("log_weight") + 1e-9, 4).alias("mean_dsir_kept"),
-        )
-        .localCheckpoint()
-    )
-    tot = kept_n.agg(F.sum("kept_tokens").alias("tot"))
-    p = F.col("kept_tokens").cast("double") / F.col("tot").cast("double")
-    shares = persist_tracked(
-        kept_n.crossJoin(F.broadcast(tot)).select(
-            "source", p.alias("p"), F.pow(p, 0.3).alias("w")
-        )
-    )
-    z = shares.agg(F.sum("w").alias("z"))
-    epochs = F.round(
-        F.lit(4.0) * F.col("w") / F.col("z") / F.col("p") + 1e-9, 4
-    )
-    mix_cols = [
-        F.col("source"),
-        F.round(F.col("w") / F.col("z") + 1e-9, 6).alias("q_temp"),
-        F.round(F.col("w") / F.col("z") / F.col("p") + 1e-9, 4).alias(
-            "boost"
-        ),
-    ]
-    if with_url_stage:
-        # v8 tail: tokens_epoch_budget's accounting over the KEPT
-        # token mass (budget = 4× kept mass, Muennighoff repeat
-        # ceiling; compared on the ROUNDED epochs, house discipline)
-        mix_cols += [
-            epochs.alias("epochs_at_4x"),
-            (epochs > 4.0).alias("over_repeat"),
-        ]
-    mix = shares.crossJoin(F.broadcast(z)).select(*mix_cols)
-    if with_bpe_tail:
-        # v9 tail: BPE vocab induced ON the kept corpus, kept token
-        # mass re-expressed in subword symbols (see v9's docstring)
-        from .text import _BPE_VOCAB_ROUNDS, _bpe_arr, _bpe_state_after_from
-
-        bstate = _bpe_state_after_from(kept, _BPE_VOCAB_ROUNDS)
-        bsyms = bstate.select(
-            "word", F.size(_bpe_arr()).cast("long").alias("n_syms")
-        )
-        bpw = (
-            kept.select("source", F.explode(TOKENS()).alias("word"))
-            .where(F.col("word") != "")
-            .groupBy("source", "word")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        bpe_n = (
-            bpw.join(bsyms, "word")
-            .groupBy("source")
-            .agg(
-                F.sum(F.col("c") * F.col("n_syms")).alias(
-                    "bpe_symbols_kept"
-                ),
-                F.sum("c").alias("_bt"),
-            )
-            .select(
-                "source",
-                "bpe_symbols_kept",
-                F.round(
-                    F.col("bpe_symbols_kept").cast("double") / F.col("_bt")
-                    + 1e-9,
-                    6,
-                ).alias("bpe_symbols_per_token"),
-            )
-        )
-    out = counts.join(kept_n, "source", "left").join(mix, "source", "left")
-    if with_bpe_tail:
-        out = out.join(bpe_n, "source", "left")
-    cols = [
-        "source",
-        "n_raw",
-    ]
-    if with_url_stage:
-        cols.append(
-            F.coalesce("n_after_url", F.lit(0)).alias("n_after_url")
-        )
-    cols += [
-        F.coalesce("n_after_domain", F.lit(0)).alias("n_after_domain"),
-        F.coalesce("n_after_exact", F.lit(0)).alias("n_after_exact"),
-        F.coalesce("n_after_boilerplate", F.lit(0)).alias(
-            "n_after_boilerplate"
-        ),
-        F.coalesce("n_after_quality", F.lit(0)).alias("n_after_quality"),
-        F.coalesce("n_after_containment", F.lit(0)).alias(
-            "n_after_containment"
-        ),
-        F.coalesce("n_after_semantic", F.lit(0)).alias("n_after_semantic"),
-    ]
-    if with_decontam:
-        cols.append(
-            F.coalesce("n_after_decontam", F.lit(0)).alias(
-                "n_after_decontam"
-            )
-        )
-    cols += [
-        F.coalesce("n_kept", F.lit(0)).alias("n_kept"),
-        F.coalesce("kept_tokens", F.lit(0)).alias("kept_tokens"),
-        "mean_dsir_kept",
-        "q_temp",
-        "boost",
-    ]
-    if with_url_stage:
-        cols += ["epochs_at_4x", "over_repeat"]
-    if with_bpe_tail:
-        cols += [
-            F.coalesce("bpe_symbols_kept", F.lit(0)).alias(
-                "bpe_symbols_kept"
-            ),
-            "bpe_symbols_per_token",
-        ]
-    return out.select(*cols)
+    return _bpe_tail(_run_stages(spark, sf, _V8_STAGES))
 
 
 def _v67_sql(
@@ -3880,21 +3693,10 @@ def llm_data_pipeline_v3(spark: SparkSession, sf: str) -> DataFrame:
         chunk_explode,
         doctored_text,
         pii_scrubbed,
-        text_quality,
-        text_repetition,
     )
 
-    docs = table(spark, sf, "documents")
-    quality_ids = (
-        text_quality(spark, sf)
-        .where(F.col("passes_quality") == 1)
-        .select("doc_id")
-    )
-    non_repetitive = (
-        text_repetition(spark, sf)
-        .where(~F.col("is_repetitive"))
-        .select("doc_id")
-    )
+    layers = _run_stages(spark, sf, _V3_GATES)
+    docs = layers[0][1]
     # Two deliberate physical choices (both NOTES.md traps):
     # - persist the frames consumed by TWO downstream branches
     #   (base → gram-join + anti-join; mixed → keeper-agg + final
@@ -3906,10 +3708,7 @@ def llm_data_pipeline_v3(spark: SparkSession, sf: str) -> DataFrame:
     #   8.5 s for 149k grams on one core vs <1 s spread). No-op at
     #   real scale, 10× locally.
     base = (
-        docs.where(~F.expr(_EVAL_PRED))
-        .join(quality_ids, "doc_id")
-        .join(non_repetitive, "doc_id")
-        .select("doc_id", "source", "text")
+        layers[-1][1]
         .repartition(spark.sparkContext.defaultParallelism)
         .transform(persist_tracked)
     )
@@ -5171,7 +4970,7 @@ QUERIES: dict[str, QuerySpec] = {
     "dedup_ngram_jaccard": QuerySpec(
         "dedup_ngram_jaccard", dedup_ngram_jaccard, _NGRAM_SQL
     ),
-    # round-12 second-wave additions (fronted in _ROUND12_FRONT)
+    # round-12 second-wave additions
     "dedup_paragraph": QuerySpec(
         "dedup_paragraph", dedup_paragraph, _PARAGRAPH_SQL
     ),
@@ -5252,12 +5051,12 @@ QUERIES: dict[str, QuerySpec] = {
     "text_bigram_lm_score": QuerySpec(
         "text_bigram_lm_score", text_bigram_lm_score, _BIGRAM_LM_SQL
     ),
-    # r8: LSH recall self-certification (fronted via _ROUND8_FRONT)
+    # r8: LSH recall self-certification
     "dedup_near_recall": QuerySpec(
         "dedup_near_recall", dedup_near_recall, _NEAR_RECALL_SQL
     ),
     # r11: MinHash estimator-quality pin (companion to the banded
-    # rewrite; fronted via _ROUND11_FRONT)
+    # rewrite)
     "dedup_minhash_est_error": QuerySpec(
         "dedup_minhash_est_error", dedup_minhash_est_error, _MINHASH_EST_SQL
     ),

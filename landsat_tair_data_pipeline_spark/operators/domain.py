@@ -531,45 +531,35 @@ def agg_domain_grouped(spark: SparkSession, sf: str) -> DataFrame:
     oracle's nb CTE computes the same per-patch count from the
     pixel-long table. Only the thermal grid is converted (49 px/patch),
     not all 7-11 bands to_brightness_temperature would process — the
-    rest of this query never reads them. BT uses np_ln / np_div (numpy
+    rest of this query never reads them. BT uses
+    radiometry.brightness_temperatures (np_ln / np_div, numpy
     semantics): plain F.log returns NULL on non-positive radiance,
     silently excluding such pixels from min/max/avg/stddev while n_px
     still counts them."""
-    from ..functions.radiometry import np_div, np_ln, thermal_band_index
+    from ..functions.radiometry import (
+        brightness_temperatures,
+        coeff,
+        k_constant,
+        thermal_band_index,
+    )
 
     base = _scene_dates(_valid_scene_base(spark))
     n_bands = F.size("bands")
-    thermal_grid = F.element_at("bands", thermal_band_index(n_bands, base=1))
-    k1 = F.coalesce(
-        F.element_at("thermal", "K1_CONSTANT_BAND_10"),
-        F.element_at("thermal", "K1_CONSTANT_BAND_6"),
-    ).cast("double")
-    k2 = F.coalesce(
-        F.element_at("thermal", "K2_CONSTANT_BAND_10"),
-        F.element_at("thermal", "K2_CONSTANT_BAND_6"),
-    ).cast("double")
     band_1b = thermal_band_index(n_bands, base=1)
-    ml = F.element_at(
-        "rescaling", F.concat(F.lit("RADIANCE_MULT_BAND_"), band_1b.cast("string"))
-    ).cast("double")
-    al = F.element_at(
-        "rescaling", F.concat(F.lit("RADIANCE_ADD_BAND_"), band_1b.cast("string"))
-    ).cast("double")
+    thermal_grid = F.element_at("bands", band_1b)
     is_l5 = F.when(n_bands == 7, 1).otherwise(0)
     px = base.select(
         is_l5.alias("is_landsat_5"),
         "yr",
         F.explode(F.flatten(thermal_grid)).alias("dn"),
-        ml.alias("ml"),
-        al.alias("al"),
-        k1.alias("k1"),
-        k2.alias("k2"),
+        coeff("rescaling", "RADIANCE_MULT_BAND_", band_1b).alias("ml"),
+        coeff("rescaling", "RADIANCE_ADD_BAND_", band_1b).alias("al"),
+        k_constant("thermal", "K1").alias("k1"),
+        k_constant("thermal", "K2").alias("k2"),
     )
     rad = F.col("dn").cast("double") * F.col("ml") + F.col("al")
-    bt = F.when(
-        F.col("is_landsat_5") == 1,
-        np_div(F.col("k2"), np_ln(np_div(F.col("k1"), rad) + 1.0)),
-    ).otherwise(np_div(F.col("k2"), np_div(F.col("k1"), rad + 1.0)))
+    bt_l5, bt_l89 = brightness_temperatures(rad, F.col("k1"), F.col("k2"))
+    bt = F.when(F.col("is_landsat_5") == 1, bt_l5).otherwise(bt_l89)
     thermal_px = px.select("is_landsat_5", "yr", bt.alias("bt"))
     return thermal_px.groupBy("is_landsat_5", "yr").agg(
         F.count(F.lit(1)).alias("n_px"),

@@ -4066,7 +4066,7 @@ QUERIES: dict[str, QuerySpec] = {
     "window_percent_rank": QuerySpec(
         "window_percent_rank", window_percent_rank, _PERCENT_RANK_SQL
     ),
-    # round-8 additions (fronted in registry._ROUND8_FRONT on arrival)
+    # round-8 additions
     "events_streaks": QuerySpec(
         "events_streaks", events_streaks, _STREAKS_SQL
     ),
@@ -4086,11 +4086,11 @@ QUERIES: dict[str, QuerySpec] = {
     "ts_interval_union": QuerySpec(
         "ts_interval_union", ts_interval_union, _INTERVAL_UNION_SQL
     ),
-    # r9: ratio-thresholded RFM segmentation (fronted on arrival)
+    # r9: ratio-thresholded RFM segmentation
     "events_rfm_segment": QuerySpec(
         "events_rfm_segment", events_rfm_segment, _RFM_SQL
     ),
-    # r9 late additions (fronted in registry._ROUND9_FRONT on arrival)
+    # r9 late additions
     "join_asof_tolerance": QuerySpec(
         "join_asof_tolerance", join_asof_tolerance, _ASOF_TOL_SQL
     ),
@@ -4128,7 +4128,7 @@ QUERIES: dict[str, QuerySpec] = {
     "agg_histogram_equidepth": QuerySpec(
         "agg_histogram_equidepth", agg_histogram_equidepth, _EQD_SQL
     ),
-    # round-10 additions (fronted in registry._ROUND10_FRONT on arrival)
+    # round-10 additions
     "agg_mad_outlier_days": QuerySpec(
         "agg_mad_outlier_days", agg_mad_outlier_days, _MAD_SQL
     ),
@@ -4156,11 +4156,11 @@ QUERIES: dict[str, QuerySpec] = {
     "ts_autocorr_lag": QuerySpec(
         "ts_autocorr_lag", ts_autocorr_lag, _AUTOCORR_SQL
     ),
-    # r11: classical additive decomposition (fronted via _ROUND11_FRONT)
+    # r11: classical additive decomposition
     "ts_seasonal_decompose": QuerySpec(
         "ts_seasonal_decompose", ts_seasonal_decompose, _SEASONAL_SQL
     ),
-    # round-12 second-wave addition (fronted in _ROUND12_FRONT)
+    # round-12 second-wave addition
     "ts_forecast_seasonal_naive": QuerySpec(
         "ts_forecast_seasonal_naive",
         ts_forecast_seasonal_naive,

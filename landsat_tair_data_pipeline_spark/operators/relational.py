@@ -2228,7 +2228,7 @@ WHERE EXISTS (SELECT 1 FROM orders
 
 QUERIES: dict[str, QuerySpec] = {
     "profile_table": QuerySpec("profile_table", profile_table, _PROFILE_SQL),
-    # round-12 second-wave addition (fronted in _ROUND12_FRONT)
+    # round-12 second-wave addition
     "dq_constraint_check": QuerySpec(
         "dq_constraint_check", dq_constraint_check, _DQ_CONSTRAINT_SQL
     ),
@@ -2352,7 +2352,7 @@ QUERIES: dict[str, QuerySpec] = {
     "join_bloom_prefilter": QuerySpec(
         "join_bloom_prefilter", join_bloom_prefilter, _BLOOM_PREFILTER_SQL
     ),
-    # round-9 addition (fronted in registry._ROUND9_FRONT on arrival)
+    # round-9 addition
     "agg_bitmap_distinct": QuerySpec(
         "agg_bitmap_distinct", agg_bitmap_distinct, _BITMAP_DISTINCT_SQL
     ),

@@ -1925,6 +1925,12 @@ def _ranked_cells(emb: DataFrame, seed_src: DataFrame) -> DataFrame:
     )
     seed_rows.sort(key=lambda r: int(r["vec_id"]))
     cids = np.array([int(r["vec_id"]) for r in seed_rows], dtype=np.int64)
+    if len(cids) == 0:
+        # no seed vectors → no cells, so no vector has a rank (the
+        # oracle's ranked CTE is empty too)
+        return emb.sparkSession.createDataFrame(
+            [], "vec_id long, cid long, rk int"
+        )
     C = np.array([[float(x) for x in r["v"]] for r in seed_rows])
     nprobe = _IVF_GRAPH_NPROBE
 
@@ -2951,7 +2957,7 @@ QUERIES: dict[str, QuerySpec] = {
     "emb_nearest_centroid": QuerySpec(
         "emb_nearest_centroid", emb_nearest_centroid, _NEAREST_CENTROID_SQL
     ),
-    # round-8 additions (fronted in registry._ROUND8_FRONT on arrival)
+    # round-8 additions
     "emb_kmeans_step": QuerySpec(
         "emb_kmeans_step", emb_kmeans_step, _KMEANS_STEP_SQL
     ),
@@ -2965,13 +2971,11 @@ QUERIES: dict[str, QuerySpec] = {
     "sim_ivf_recall": QuerySpec(
         "sim_ivf_recall", sim_ivf_recall, _IVF_RECALL_SQL
     ),
-    # post-front r8 addition: the r8 window is full (50), so this key's
-    # first driver row lands in r9 — NOTES "ROUND 9 FRONT" lists it
-    # first (hash-green locally at sf0.001/0.01/0.1 meanwhile)
+    # r8 addition (hash-green locally at sf0.001/0.01/0.1)
     "emb_pca_power": QuerySpec(
         "emb_pca_power", emb_pca_power, _pca_sql()
     ),
-    # round-9 addition (fronted in registry._ROUND9_FRONT on arrival)
+    # round-9 addition
     "emb_kmeans_converged": QuerySpec(
         "emb_kmeans_converged", emb_kmeans_converged, _KMEANS_CONV_SQL
     ),
@@ -2982,7 +2986,7 @@ QUERIES: dict[str, QuerySpec] = {
     "join_nn_radius_2d": QuerySpec(
         "join_nn_radius_2d", join_nn_radius_2d, _NN_RADIUS_SQL
     ),
-    # round-10 additions (fronted in registry._ROUND10_FRONT on arrival)
+    # round-10 additions
     "emb_matryoshka_recall": QuerySpec(
         "emb_matryoshka_recall", emb_matryoshka_recall, _MRL_SQL
     ),

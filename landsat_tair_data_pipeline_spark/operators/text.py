@@ -2251,11 +2251,11 @@ QUERIES: dict[str, QuerySpec] = {
     "corpus_diff_snapshot": QuerySpec(
         "corpus_diff_snapshot", corpus_diff_snapshot, _DIFF_SQL
     ),
-    # round-14 URL/address grain (fronted in _ROUND14_FRONT)
+    # round-14 URL/address grain
     "text_url_canonicalize": QuerySpec(
         "text_url_canonicalize", text_url_canonicalize, _URL_CANON_SQL
     ),
-    # round-12 second-wave addition (fronted in _ROUND12_FRONT)
+    # round-12 second-wave addition
     "text_dsir_weight": QuerySpec(
         "text_dsir_weight", text_dsir_weight, _DSIR_SQL
     ),
@@ -2281,18 +2281,18 @@ QUERIES: dict[str, QuerySpec] = {
     "text_chunk_stride": QuerySpec(
         "text_chunk_stride", text_chunk_stride, _CHUNK_SQL
     ),
-    # round-8 addition (fronted in registry._ROUND8_FRONT on arrival)
+    # round-8 addition
     "text_zipf_slope": QuerySpec(
         "text_zipf_slope", text_zipf_slope, _ZIPF_SQL
     ),
-    # round-9 addition (fronted in registry._ROUND9_FRONT on arrival)
+    # round-9 addition
     "text_heavy_hitters": QuerySpec(
         "text_heavy_hitters", text_heavy_hitters, _HH_SQL
     ),
     "text_ngram_novelty": QuerySpec(
         "text_ngram_novelty", text_ngram_novelty, _novelty_sql()
     ),
-    # round-10 additions (fronted in registry._ROUND10_FRONT on arrival)
+    # round-10 additions
     "text_entropy": QuerySpec("text_entropy", text_entropy, _ENTROPY_SQL),
     "text_jsd_source_divergence": QuerySpec(
         "text_jsd_source_divergence", text_jsd_source_divergence, _JSD_SQL

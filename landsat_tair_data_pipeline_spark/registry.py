@@ -66,14 +66,8 @@ def all_queries() -> dict[str, QuerySpec]:
     from .streaming import windows as streaming_windows
 
     # Merge order is LOAD-BEARING: the driver's correctness gate records
-    # only the first 50 registry entries in this insertion order. Round 1
-    # verified relational/events/dedup/similarity-head; rounds 2-3 covered
-    # domain, mapping, text, streaming; round 4 the 25 never-checked keys.
-    # Round 5 fronts the 9 keys broken by the r4 testdata regeneration
-    # (7 watermarked streaming + join_asof + mm_feature_extract, all fixed
-    # this round) followed by the 41 r3-vintage keys the regenerated
-    # environment has never re-confirmed; everything else follows in
-    # module order.
+    # only the first 50 registry entries in this insertion order —
+    # _DRIVER_FRONT first, then every other key in module order.
     merged: dict[str, QuerySpec] = {}
     for mod in (
         domain,
@@ -92,8 +86,8 @@ def all_queries() -> dict[str, QuerySpec]:
                 raise ValueError(f"duplicate query id {name!r}")
             merged[name] = spec
 
-    front = [k for k in _ROUND15_FRONT if k in merged]
-    missing = [k for k in _ROUND15_FRONT if k not in merged]
+    front = [k for k in _DRIVER_FRONT if k in merged]
+    missing = [k for k in _DRIVER_FRONT if k not in merged]
     if missing:
         raise ValueError(f"front-ordered keys missing from registry: {missing}")
     ordered = {k: merged[k] for k in front}
@@ -101,47 +95,8 @@ def all_queries() -> dict[str, QuerySpec]:
     return ordered
 
 
-# First 50 slots of the driver's correctness window for round 10 —
-# the final r5 drain plus the start of the r6 drain (VERDICT r9 items
-# 1 and 4). Ordering: (1) new r10 keys, fronted on arrival (the r8
-# lesson: a key that misses its round's window is next round's
-# backlog); (2) the 27 r5-vintage fixture-backed keys displaced from
-# the r9 front (computed from the CORRECTNESS_r*.json union via
-# tools/vintage_report.py) — after they land, NO key's latest driver
-# row predates r6; (3) the oldest r6-vintage keys,
-# most-data-sensitive first (dedup/text/events testdata readers
-# before the relational agg/window/setop families — testdata
-# regenerates every round, in-repo fixtures never do). New-key slots
-# displace from the END of the r6 fill; displaced keys rotate in r11.
-# First 50 slots of the driver's correctness window for round 12 —
-# the first of the two windows that finish the rotation (VERDICT r11
-# item 1 / NOTES r11 plan). Ordering: (1) new r12 keys, fronted on
-# arrival; (2) keys whose IMPLEMENTATION or SURFACE changed this round
-# (agg_approx re-pointed to the pinned-bound oracled surface;
-# ts_seasonal_decompose's strength ratio made explicitly COALESCEd —
-# value-identical, re-certified anyway); (3) 42 of the 48 r7-vintage
-# keys (tools/vintage_report.py), most-data-sensitive first —
-# documents/embeddings/events/stream readers, then the
-# lineitem/orders q* families, then windows/setops, then the
-# fixture-backed Landsat core. The 6 keys spilling to the r13 fill
-# (map_cast_double, map_coeff_vector, map_flatten, map_k_coeffs,
-# map_str_to_float, join_zip_positional) are purely in-repo
-# fixture-backed — their inputs NEVER regenerate, so their r7 rows
-# carry the least staleness risk in the registry.
-# First 50 slots of the driver's correctness window for round 13 —
-# the window that FINISHES the vintage rotation (VERDICT r12 item 1:
-# after it lands, no key's latest driver row predates r8, the first
-# time every key is within 5 rounds). Ordering: (1) new r13 keys,
-# fronted on arrival; (2) keys whose RESULTS changed this round — the
-# √n-derived IVF cell default (VERDICT r12 item 2) changes
-# sim_knn_graph_ivf / sim_knn_graph_ivf_recall / dedup_semdedup and
-# through the semantic-dedup stage llm_data_pipeline_v5/v6; (3) the
-# 14 r7-vintage fixture-backed keys (tools/vintage_report.py — the
-# Landsat core + window_running_sum the r12 front displaced); (4)
-# r8-vintage fill, most-data-sensitive first (testdata readers before
-# fixture-backed relational/augment keys).
-# First 50 slots of the driver's correctness window for round 15 —
-# the first of the TWO windows that drain the 48-key r9-vintage cohort
+# First 50 slots of the driver's correctness window, as set for round
+# 15 — the first of the TWO windows that drain the 48-key r9-vintage cohort
 # (VERDICT r14 item 1: 48 keys don't fit one 50-slot window beside new
 # arrivals; this window takes 40, the remaining 8 lead the r16 fill).
 # Ordering: (1) new r15 keys, fronted on arrival; (2) keys whose
@@ -161,7 +116,7 @@ def all_queries() -> dict[str, QuerySpec]:
 # profile_join_key_skew, pack_batches_padding, pack_shards_bytes,
 # layout_zorder_stats — aggregate/packing profiles whose relational
 # inputs carry the least regeneration sensitivity in the cohort.
-_ROUND15_FRONT = [
+_DRIVER_FRONT = [
     # new in r15, fronted on arrival (7)
     "text_bpe_merge_step",
     "text_bpe_vocab",
@@ -221,815 +176,6 @@ _ROUND15_FRONT = [
     # sim_eval_pq_mrr_ndcg (new keys front on arrival); they join the
     # 8 named spill keys at the head of the r16 fill
 ]
-
-# Historical r14 order kept for reference (drove CORRECTNESS_r14) —
-# the window that finishes the r8 drain (VERDICT r13 item 1: after it
-# lands, the vintage floor reaches r9 and every key's driver row is
-# within 5 rounds). Ordering: (1) new r14 keys, fronted on arrival;
-# (2) keys whose IMPLEMENTATION changed this round — the vectorized
-# MinHash kernel + shared _hashed_docs frame (ext_dedup_near,
-# dedup_near_recall, dedup_minhash_est_error) and the xxhash64 →
-# md5-long token-hash unification (jaccard/containment/ngram/
-# clusters/text_repetition and the v4–v7 pipeline containment
-# stages) — results are hash-invariant by construction, re-certified
-# anyway; (3) the FULL 29-key r8-vintage fill
-# (tools/vintage_report.py), finishing the rotation. The r9-vintage
-# spares that briefly held the tail slots were displaced by late r14
-# arrivals (see the list-end comment).
-_ROUND14_FRONT = [
-    # new in r14, fronted on arrival (8)
-    "text_url_canonicalize",
-    "dedup_url_grain",
-    "text_host_reputation",
-    "llm_data_pipeline_v8",
-    "tokens_epoch_budget",
-    "tokens_budget_waterfill",
-    "emb_dedup_incremental",
-    "stream_dedup_shard",
-    # changed in r14 — vectorized MinHash kernel + md5-long
-    # unification (13)
-    "ext_dedup_near",
-    "dedup_near_recall",
-    "dedup_minhash_est_error",
-    "dedup_jaccard_pairs",
-    "dedup_containment_pairs",
-    "dedup_containment_asym",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "text_repetition",
-    "llm_data_pipeline_v4",
-    "llm_data_pipeline_v5",
-    "llm_data_pipeline_v6",
-    "llm_data_pipeline_v7",
-    # r8-vintage fill: the full remaining 29 (tools/vintage_report.py)
-    # — closes the rotation at a r9 floor
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_decayed_sum",
-    "agg_grouping_sets",
-    "agg_hll_intersection",
-    "agg_quantile_vs_exact",
-    "agg_rollup",
-    "aug_explode_4x",
-    "aug_geo_shift",
-    "aug_jitter_date",
-    "aug_rot90",
-    "aug_train_pipeline",
-    "ext_topk",
-    "join_anti",
-    "join_bloom_prefilter",
-    "join_outer_coalesce",
-    "join_salted_skew",
-    "join_semi",
-    "mm_frame_sample",
-    "q11_important_parts",
-    "q12_ship_delay_priority",
-    "q20_dominant_share_suppliers",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "setop_union",
-    "sort_limit",
-    "split_train_test",
-    "window_percent_rank",
-    "window_range_frame",
-    # the r9-vintage spares (dedup_edit_distance_pairs,
-    # emb_kmeans_converged, emb_pca_power) were all displaced by the
-    # late r14 arrivals (text_host_reputation, tokens_budget_waterfill,
-    # emb_dedup_incremental) — the r8 lesson: new keys front on
-    # arrival; the three spares lead the r15 fill plan
-]
-
-# Historical r13 order kept for reference (drove CORRECTNESS_r13).
-_ROUND13_FRONT = [
-    # new in r13, fronted on arrival (10)
-    "sim_ann_cross_join",
-    "sim_ann_cross_recall",
-    "sim_semantic_decontam",
-    "llm_data_pipeline_v7",
-    "ts_forecast_holt_winters",
-    "mm_image_dedup_stack",
-    "mm_caption_integrity",
-    "sample_shuffle_deterministic",
-    "pack_curriculum_order",
-    "dedup_incremental_shard",
-    # changed in r13 — √n cell default (5) + the md5-family MinHash
-    # graduation (3), re-certify on arrival
-    "sim_knn_graph_ivf",
-    "sim_knn_graph_ivf_recall",
-    "dedup_semdedup",
-    "llm_data_pipeline_v5",
-    "llm_data_pipeline_v6",
-    "ext_dedup_near",
-    "dedup_near_recall",
-    "dedup_minhash_est_error",
-    # r7-vintage drain: the full remaining 14 (fixture-backed Landsat
-    # core + window_running_sum) — finishes the rotation
-    "map_cast_double",
-    "map_coeff_vector",
-    "map_flatten",
-    "map_k_coeffs",
-    "map_str_to_float",
-    "join_zip_positional",
-    "map_band_remap_l8",
-    "map_bt_l5",
-    "map_bt_l89",
-    "map_dn_to_radiance",
-    "proj_date_parts",
-    "src_csv_ground_truths",
-    "sink_csv_stations",
-    "window_running_sum",
-    # r8-vintage fill: testdata readers first (embeddings/events/
-    # documents/stream regenerate every round; fixtures never do)
-    "stream_scd2",
-    "sim_ivf_topk",
-    "sim_ivf_recall",
-    "emb_kmeans_step",
-    "emb_label_stats",
-    "emb_nearest_centroid",
-    "ts_asof_interp",
-    "ts_interval_union",
-    "events_attribution_last_touch",
-    "events_cumulative_uniques",
-    "events_markov_transitions",
-    "events_streaks",
-    "text_zipf_slope",
-    "sample_weighted",
-    "graph_pagerank",
-    "scd2_user_history",
-    "mm_type_summary",
-    "mm_resize_plan",
-]
-
-# Historical r12 order kept for reference (drove CORRECTNESS_r12).
-_ROUND12_FRONT = [
-    # new in r12 second wave, fronted on arrival (8) — displace the
-    # entire fixture-backed Landsat-core tail (map_band_remap_l8,
-    # map_bt_l5, map_bt_l89, map_dn_to_radiance, proj_date_parts,
-    # src_csv_ground_truths, sink_csv_stations) PLUS window_running_sum
-    # into the r13 fill, alongside the six r7 spills of the same
-    # in-repo-fixture class — their inputs never regenerate, the least
-    # staleness-sensitive slots in the registry
-    "dedup_paragraph",
-    "dedup_paragraph_scrub",
-    "text_dsir_weight",
-    "text_quality_bucket",
-    "sample_temperature",
-    "ts_forecast_seasonal_naive",
-    "dq_constraint_check",
-    "llm_data_pipeline_v6",
-    # new in r12, fronted on arrival (6)
-    "dedup_simhash_hamming_wide",
-    "sim_knn_graph_ivf",
-    "sim_knn_graph_ivf_recall",
-    "dedup_semdedup",
-    "text_domain_rollup",
-    "llm_data_pipeline_v5",
-    # changed in r12 — re-certify on arrival (2)
-    "agg_approx",
-    "ts_seasonal_decompose",
-    # r7-vintage drain: testdata-reading documents/embeddings/events/
-    # streaming block first (testdata regenerates every round)
-    "ext_dedup_exact",
-    "llm_data_pipeline",
-    "text_bigram_lm_score",
-    "emb_sample_stratified",
-    "sim_lsh_topk",
-    "events_funnel",
-    "events_session",
-    "events_tumbling",
-    "stream_stateful_user_totals",
-    "agg_hll_vs_exact",
-    "pack_chunks",
-    "mm_decode_stats",
-    # r7-vintage: lineitem/orders readers (TPC-H core)
-    "q1_pricing_summary",
-    "sql_q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q13_order_histogram",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "q22_idle_customers",
-    "agg_ratio",
-    "agg_summary_stats",
-    "distinct_proj",
-    "proj_math_funcs",
-    "proj_string_funcs",
-    "setop_except",
-    "setop_intersect",
-    "window_lag_lead",
-    "window_rank",
-]
-
-# Historical r11 order kept for reference (drove CORRECTNESS_r11).
-# First 50 slots of the driver's correctness window for round 11 —
-# the full r6-vintage drain (VERDICT r10 item 2 / NOTES r10 plan).
-# Ordering: (1) new r11 keys, fronted on arrival; (2) keys whose
-# IMPLEMENTATION changed this round and need fresh driver evidence
-# (dedup_simhash re-pointed to the oracled md5-parity signature,
-# ext_dedup_near rewritten as the deterministic banded-MinHash join,
-# dedup_near_recall whose recall base is that rewrite); (3) ALL 42
-# r6-vintage keys (computed from the CORRECTNESS_r*.json union via
-# tools/vintage_report.py), most-data-sensitive first — after they
-# land, no key's latest driver row predates r7; (4) r7-vintage fill
-# in the remaining slots, companion pins and documents-readers first.
-_ROUND11_FRONT = [
-    # new in r11, fronted on arrival (3)
-    "text_psi_drift",
-    "text_repeated_ngrams",
-    "ts_seasonal_decompose",
-    # changed in r11 — re-certify on arrival (3) — plus the new
-    # estimator-quality companion born alongside the rewrite
-    "dedup_simhash",
-    "ext_dedup_near",
-    "dedup_near_recall",
-    "dedup_minhash_est_error",
-    # r6-vintage drain: testdata-reading documents/text/embeddings/
-    # multimodal/streaming block first (testdata regenerates every
-    # round; fixtures never do)
-    "src_jsonl_documents",
-    "text_chunk_stride",
-    "text_pii_scrub",
-    "sim_lsh_buckets",
-    "emb_quantize_int8",
-    "mm_dedup_binary",
-    "sample_source_mix",
-    "stream_static_join",
-    "agg_sketch_hll",
-    # r6-vintage: events readers
-    "events_anomaly_zscore",
-    "events_dedup_first",
-    "events_json_extract",
-    "events_rate_per_user",
-    "events_retention",
-    "events_sliding",
-    "events_top_paths",
-    "ts_resample_ohlc",
-    "join_range_interval",
-    "pivot_event_counts",
-    "unpivot_event_counts",
-    "window_time_range",
-    # r6-vintage: relational / fixture-backed tail
-    "agg_conditional",
-    "agg_corr",
-    "agg_group_stats",
-    "agg_having",
-    "agg_mode_per_group",
-    "agg_percentiles",
-    "agg_salted_skew",
-    "agg_value_histogram",
-    "filt_predicates",
-    "profile_table",
-    "proj_case_when",
-    "q16_supplier_variety",
-    "q19_disjunctive_pushdown",
-    "q4_order_priority",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "setop_except_all",
-    "setop_intersect_all",
-    "sql_lateral_topk",
-    "window_first_last",
-    "window_ntile",
-    # r7-vintage fill (1): the jaccard machinery the r11 recall pin
-    # leans on (events_funnel and agg_hll_vs_exact displaced by
-    # dedup_minhash_est_error / ts_seasonal_decompose; they keep their
-    # r7-green rows and lead the r12 fill)
-    "dedup_jaccard_pairs",
-]
-
-# Historical r10 order kept for reference (drove CORRECTNESS_r10).
-_ROUND10_FRONT = [
-    # new in r10, fronted on arrival
-    # (each new key displaces one r6-vintage key from the tail)
-    "dedup_containment_asym",
-    "dedup_simhash_hamming",
-    "text_entropy",
-    "agg_mad_outlier_days",
-    "events_cooccurrence_lift",
-    "join_asof_nearest",
-    "emb_matryoshka_recall",
-    "src_orc_events",
-    "window_rolling_median",
-    "agg_linreg_trend",
-    "events_cohort_matrix",
-    "text_jsd_source_divergence",
-    "sim_knn_graph",
-    "llm_data_pipeline_v4",
-    "events_power_users_pareto",
-    "ts_autocorr_lag",
-    # r5-vintage fixture-backed drain (27) — the whole remaining block
-    "agg_count",
-    "agg_domain_grouped",
-    "agg_minmax_scene_dates",
-    "dedup_keep_best",
-    "domain_pipeline_summary",
-    "filt_band_cardinality",
-    "filt_load_errors",
-    "filt_metadata_keys",
-    "filt_sentinel_gt",
-    "filt_skip_first",
-    "join_gt_lookup",
-    "join_scene_assets",
-    "join_station_dim",
-    "map_bt_pixels",
-    "map_concat_features",
-    "mm_feature_extract",
-    "proj_date_parts_csv",
-    "proj_scene_date_parse",
-    "proj_scene_id_from_filename",
-    "proj_sensor_flag",
-    "sample_stratified",
-    "sink_parquet_partitioned",
-    "src_dir_listing",
-    "src_json_metadata",
-    "src_pt_real",
-    "src_pt_tensor",
-    "src_station_txt",
-    # r6-vintage fill, most-data-sensitive first (23 slots at zero new
-    # keys; trimmed from the tail as r10 keys land above — trimmed
-    # keys keep their r6-green rows and lead the r11 front)
-    "llm_data_pipeline_v3",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "dedup_ngram_jaccard",
-    "dedup_normalized",
-    "dedup_shared_ngram_pairs",
-    "ext_sim_search",
-    # (trimmed from the tail as r10 keys landed — they keep their
-    # r6-green rows and lead the r11 front: sim_lsh_buckets,
-    # emb_quantize_int8, text_chunk_stride,
-    # text_pii_scrub,
-    # sample_source_mix,
-    # src_jsonl_documents, stream_static_join, events_top_paths,
-    # events_anomaly_zscore, events_retention, events_sliding,
-    # events_dedup_first, events_json_extract, events_rate_per_user,
-    # ts_resample_ohlc, mm_dedup_binary)
-]
-
-# Historical r9 order kept for reference (drove CORRECTNESS_r09) —
-# the rotation-debt drain (VERDICT r8 items 1-2). Ordering: (1)
-# emb_pca_power — the ONLY key of 199 without a driver row (added
-# after the r8 window filled; judge-verified hash-green at sf0.01,
-# builder-verified at sf0.001/0.01/0.1); (2) new r9 keys, fronted on
-# arrival (the r8 lesson: a key that misses its round's window is
-# next round's backlog); (3) the r5-vintage keys — every key whose
-# latest driver row is r5 (computed from the CORRECTNESS_r0*.json
-# union), most-data-sensitive first: testdata-reading text/streaming/
-# events blocks (testdata has been regenerated since r5) before the
-# fixture-backed domain/mapping block (fixtures are in-repo and never
-# regenerated, so their old evidence is least at risk). New-key slots
-# displace from the END (fixture-backed tail); displaced keys rotate
-# in r10. After this round no key's latest driver row predates r6.
-_ROUND9_FRONT = [
-    # the one key without any driver row (1)
-    "emb_pca_power",
-    # new in r9, fronted on arrival (each new key displaces one
-    # fixture-backed key from the tail)
-    "emb_kmeans_converged",
-    "graph_label_propagation",
-    "graph_triangle_count",
-    "events_rfm_segment",
-    "dedup_containment_pairs",
-    "text_heavy_hitters",
-    "agg_bitmap_distinct",
-    "join_asof_tolerance",
-    "layout_zorder_stats",
-    "window_distinct_trailing",
-    "join_interval_overlap",
-    "emb_pq_codes",
-    "sim_pq_recall",
-    "pack_shards_bytes",
-    "dedup_edit_distance_pairs",
-    "agg_moments_merge",
-    "sample_negative_pairs",
-    "join_scd2_pointintime",
-    "events_ab_welch",
-    "join_nn_radius_2d",
-    "events_user_overlap_jaccard",
-    "profile_join_key_skew",
-    "est_join_cardinality",
-    "pack_batches_padding",
-    "ts_changepoint_cusum",
-    "agg_histogram_equidepth",
-    "text_ngram_novelty",
-    # r5-vintage: testdata-reading documents/text block (8)
-    "text_token_count",
-    "text_rolling_hash",
-    "ext_text_stats",
-    "text_quality",
-    "text_lang_guess",
-    "text_fingerprint",
-    "text_bigrams_top",
-    "text_tfidf_top",
-    # r5-vintage: streaming block (events testdata) (8)
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_session",
-    "stream_dedup",
-    "stream_dedup_then_window",
-    "stream_stream_join",
-    "ext_stream_window",
-    "stream_sink_parquet",
-    # r5-vintage: testdata-reading events/relational/dedup (6 — the
-    # block started at 9 and was trimmed as new r9 keys landed)
-    "join_asof",
-    "ts_gapfill",
-    "upsert_snapshot",
-    "llm_data_pipeline_v2",
-    "text_contamination",
-    "text_repetition",
-    # (as new r9 keys land above, the tail of this fixture-backed
-    # block is trimmed to keep the list at exactly 50; trimmed so
-    # far: agg_count, proj_date_parts_csv, proj_scene_id_from_filename,
-    # src_pt_tensor, agg_domain_grouped, domain_pipeline_summary,
-    # filt_sentinel_gt, map_bt_pixels, map_concat_features,
-    # join_gt_lookup, join_station_dim, join_scene_assets,
-    # proj_scene_date_parse, src_json_metadata, src_station_txt,
-    # src_dir_listing, agg_minmax_scene_dates, filt_metadata_keys,
-    # filt_skip_first, filt_load_errors, proj_sensor_flag,
-    # filt_band_cardinality, mm_feature_extract, src_pt_real,
-    # sink_parquet_partitioned, sample_stratified, dedup_keep_best —
-    # they keep their r5-green rows and rotate in r10; the whole
-    # former fixture-backed block plus the src/sink ingest pair is
-    # now displaced)
-]
-
-# Historical r8 order kept for reference (drove CORRECTNESS_r08) —
-# the final evidence-rotation pass (VERDICT r7 items 1-2). Ordering:
-# (1) the 14 late-r7 keys that have never had a driver row — the only
-# keys in the whole registry without one (all hash-green locally at
-# sf0.001/0.01/0.1); (2) the 21 r4-vintage keys whose last driver row
-# predates two testdata regenerations (rollup/cube family, semi/anti/
-# outer joins, fixture-backed aug_* block, mm_* summaries, sort/setop/
-# window_range_frame, ext_topk, agg_count_distinct, emb_label_stats);
-# (3) the 3 r1-vintage rows-only keys (agg_approx, dedup_simhash,
-# sim_ivf_topk — oldest evidence in the registry; a rows-only row
-# still proves they run on the driver's data); (4) the 2 NEW r8 keys
-# (dedup_near_recall — the LSH quality bound hash-pinned against live
-# data, stream_scd2 — the stateful streaming SCD2 upsert oracled
-# against the batch SQL), fronted immediately so this round doesn't
-# recreate the never-driver-checked backlog it exists to clear; (5)
-# the 10 LATE-r8 additions (events_streaks,
-# events_cumulative_uniques, events_attribution_last_touch,
-# agg_hll_intersection, sample_weighted, emb_kmeans_step,
-# graph_pagerank, sim_ivf_recall, ts_interval_union,
-# text_zipf_slope), fronted on arrival for the same reason as (4) —
-# they fill the 10 slots originally earmarked for r5-vintage
-# backfills (those keys keep their r5-green driver rows, within the
-# VERDICT item-2 floor, and rotate in r9). After this round no key's
-# latest driver row is older than r5, and every key has one.
-_ROUND8_FRONT = [
-    # never driver-checked late-r7 keys (14)
-    "q2_min_cost_supplier",
-    "q11_important_parts",
-    "q12_ship_delay_priority",
-    "q20_dominant_share_suppliers",
-    "q21_waiting_suppliers",
-    "scd2_user_history",
-    "agg_quantile_vs_exact",
-    "join_salted_skew",
-    "join_bloom_prefilter",
-    "ts_asof_interp",
-    "events_markov_transitions",
-    "agg_decayed_sum",
-    "window_percent_rank",
-    "emb_nearest_centroid",
-    # r4-vintage (21)
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_count_distinct",
-    "join_semi",
-    "join_anti",
-    "join_outer_coalesce",
-    "aug_rot90",
-    "aug_explode_4x",
-    "aug_jitter_date",
-    "aug_geo_shift",
-    "aug_train_pipeline",
-    "split_train_test",
-    "mm_type_summary",
-    "mm_resize_plan",
-    "mm_frame_sample",
-    "sort_limit",
-    "setop_union",
-    "window_range_frame",
-    "ext_topk",
-    "emb_label_stats",
-    # r1-vintage rows-only (3)
-    "agg_approx",
-    "dedup_simhash",
-    "sim_ivf_topk",
-    # new in r8, fronted on arrival (2)
-    "dedup_near_recall",
-    "stream_scd2",
-    # late-r8 additions, fronted on arrival (the r8 lesson: a new key
-    # that misses its round's window becomes next round's backlog) —
-    # displacing the 10 planned r5-vintage backfills (those keys
-    # stay r5-vintage-green and rotate in r9; clearing them was a
-    # bonus over VERDICT item 2's floor, fronting new keys is not)
-    "events_streaks",
-    "events_cumulative_uniques",
-    "events_attribution_last_touch",
-    "agg_hll_intersection",
-    "sample_weighted",
-    "emb_kmeans_step",
-    "graph_pagerank",
-    "sim_ivf_recall",
-    "ts_interval_union",
-    "text_zipf_slope",
-]
-
-# Historical r7 order kept for reference (drove CORRECTNESS_r07) —
-# evidence ROTATION, not new surface (VERDICT r6 item 1). Ordering:
-# (1) the 13 r3-vintage fixture keys displaced by the r6 additions —
-# their driver evidence predates two testdata regenerations; (2)
-# mm_decode_stats, upgraded rows-only → oracled in-repo but last
-# driver-seen r4 as rows-only — front it so the stronger check is
-# driver-certified; (3) ext_dedup_near, whose only driver row is r1;
-# (4) the six r1-vintage oracled projection/setop keys (oldest hash
-# evidence in the registry); (5) two keys new in r7
-# (emb_sample_stratified, agg_hll_vs_exact — never driver-checked);
-# (6) 26 r4-vintage keys, most-data-sensitive first (testdata-reading
-# TPC-H/events/window/dedup/text blocks — testdata has been
-# regenerated twice since their last row). The 20 remaining r4-vintage (emb_label_stats joined the deferred set)
-# keys (agg_rollup/cube family, join_semi/anti/outer, mm_* summaries,
-# fixture-backed aug_* block, sort/limit/setop_union,
-# window_range_frame) rotate in r8.
-_ROUND7_FRONT = [
-    # r3-vintage fixture/radiometry block (13)
-    "map_cast_double",
-    "map_str_to_float",
-    "map_dn_to_radiance",
-    "map_bt_l5",
-    "map_bt_l89",
-    "map_band_remap_l8",
-    "map_coeff_vector",
-    "map_k_coeffs",
-    "map_flatten",
-    "agg_ratio",
-    "join_zip_positional",
-    "src_csv_ground_truths",
-    "sink_csv_stations",
-    # upgraded rows-only → oracled in-repo; driver-certify it (1)
-    "mm_decode_stats",
-    # r1-vintage rows-only near-dedup — rotate its evidence (1)
-    "ext_dedup_near",
-    # r1-vintage oracled keys, oldest hash evidence (6)
-    "proj_math_funcs",
-    "proj_string_funcs",
-    "proj_date_parts",
-    "distinct_proj",
-    "setop_intersect",
-    "setop_except",
-    # new in r7, never driver-checked (2), plus q22 — reshaped in r7
-    # (its r6 green was on a 0-row result, certifying nothing; the
-    # recent-idle form is non-trivial at every SF and needs a fresh
-    # driver row) (1)
-    "emb_sample_stratified",
-    "agg_hll_vs_exact",
-    "q22_idle_customers",
-    # r4-vintage, testdata-reading (26)
-    "stream_stateful_user_totals",
-    "ext_dedup_exact",
-    "dedup_jaccard_pairs",
-    "pack_chunks",
-    "llm_data_pipeline",
-    "text_bigram_lm_score",
-    "events_tumbling",
-    "events_session",
-    "events_funnel",
-    "sim_lsh_topk",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q10_returned_items",
-    "q13_order_histogram",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_orders",
-    "sql_q1_pricing_summary",
-    "window_rank",
-    "window_lag_lead",
-    "window_running_sum",
-    "agg_summary_stats",
-]
-
-# Historical r6 order kept for reference (drove CORRECTNESS_r06):
-# (1) the r5 red, now fixed (BIGINT-cast oracle) — prove it; (2) the
-# 11 keys added after the r5 window filled, never driver-checked;
-# (3) the r1-vintage testdata-reading keys whose last driver row
-# predates BOTH testdata regenerations (dedup/events/proj/setop/sim —
-# most data-sensitive); (4) r3-vintage fixture/mapping keys (fixtures
-# are in-repo and unchanged, so their r3 evidence is least at risk —
-# they fill the tail and are first displaced if r6 adds new keys).
-_ROUND6_FRONT = [
-    # the one r5 red, fixed this round (1)
-    "src_jsonl_documents",
-    # new in r6: binned interval join, strided chunking, weighted
-    # source mixing, HLL sketches (rows-only), five TPC-H shapes,
-    # deterministic mode, salted skew agg, v3 corpus pipeline,
-    # binary media dedup, copied-passage pairs, top paths, value
-    # histogram, OHLC resample, trailing-window anomaly flags,
-    # multiset set-ops, first/last/nth window, q16 shape, LATERAL
-    # subquery via spark.sql (23)
-    "join_range_interval",
-    "text_chunk_stride",
-    "sample_source_mix",
-    "agg_sketch_hll",
-    "q4_order_priority",
-    "q9_profit_by_nation",
-    "q19_disjunctive_pushdown",
-    "q22_idle_customers",
-    "agg_mode_per_group",
-    "agg_salted_skew",
-    "llm_data_pipeline_v3",
-    "q8_market_share",
-    "mm_dedup_binary",
-    "dedup_shared_ngram_pairs",
-    "events_top_paths",
-    "agg_value_histogram",
-    "ts_resample_ohlc",
-    "events_anomaly_zscore",
-    "setop_except_all",
-    "setop_intersect_all",
-    "window_first_last",
-    "q16_supplier_variety",
-    "sql_lateral_topk",
-    # never driver-checked, added late in r5 (11)
-    "pivot_event_counts",
-    "unpivot_event_counts",
-    "agg_percentiles",
-    "stream_static_join",
-    "events_retention",
-    "window_ntile",
-    "agg_corr",
-    "window_time_range",
-    "emb_quantize_int8",
-    "profile_table",
-    "text_pii_scrub",
-    # r1-vintage, testdata-reading, never re-checked since either
-    # regeneration (15 — displaced by late-r6 additions, lowest-value
-    # first: the four rows-only keys (dedup_simhash, ext_dedup_near,
-    # sim_ivf_topk, agg_approx — a rows-only driver row certifies
-    # least), then trivial-projection/setop kin of keys already in the
-    # window (proj_math_funcs, proj_date_parts, proj_string_funcs,
-    # distinct_proj, setop_intersect, setop_except); all stay covered
-    # in the local parity suite)
-    "agg_conditional",
-    "agg_group_stats",
-    "agg_having",
-    "dedup_clusters",
-    "dedup_embedding_cosine",
-    "dedup_ngram_jaccard",
-    "dedup_normalized",
-    "events_dedup_first",
-    "events_json_extract",
-    "events_rate_per_user",
-    "events_sliding",
-    "ext_sim_search",
-    "filt_predicates",
-    "proj_case_when",
-    "sim_lsh_buckets",
-    # (the thirteen r3-vintage fixture keys were all displaced by the
-    # thirteen r6 additions; they read in-repo fixtures the driver
-    # never regenerates, so their r3 driver evidence — plus the local
-    # parity suite — remains the least-at-risk coverage)
-]
-
-# Historical r5 order kept for reference (drove CORRECTNESS_r05):
-# the 9 keys broken by the r4 testdata regeneration (fixed this round —
-# events.ts NTZ normalization + mm_feature_extract canonicalizable
-# surface), then the r3-vintage keys whose last driver check predates the
-# regeneration, most-data-sensitive first (text/documents before
-# fixture-backed domain/mapping). Two fixture-only r3-green keys
-# (src_csv_ground_truths, sink_csv_stations) overflow past slot 50 —
-# they read in-repo fixtures the driver never regenerates.
-_ROUND5_FRONT = [
-    # broken-in-r4, fixed-in-r5 (9)
-    "stream_tumbling",
-    "stream_session",
-    "stream_sliding",
-    "stream_dedup",
-    "stream_dedup_then_window",
-    "stream_stream_join",
-    "ext_stream_window",
-    "join_asof",
-    "mm_feature_extract",
-    # new in r5: real torch.save ingest via the torch-free reader,
-    # contamination/repetition hygiene ops, exact stratified sampling
-    "src_pt_real",
-    "text_contamination",
-    "text_repetition",
-    "sample_stratified",
-    "dedup_keep_best",
-    "sink_parquet_partitioned",
-    "src_jsonl_documents",
-    "stream_sink_parquet",
-    "ts_gapfill",
-    "upsert_snapshot",
-    "llm_data_pipeline_v2",
-    # r3-vintage, documents-table-backed (data-sensitive) (8)
-    "text_token_count",
-    "text_rolling_hash",
-    "ext_text_stats",
-    "text_quality",
-    "text_lang_guess",
-    "text_fingerprint",
-    "text_bigrams_top",
-    "text_tfidf_top",
-    # r3-vintage fixture/domain/mapping block (22 — the rest of the
-    # original 33 were displaced as r5 grew new keys; they keep their
-    # r3 evidence and lead the r6 window, NOTES.md)
-    "proj_sensor_flag",
-    "filt_band_cardinality",
-    "filt_metadata_keys",
-    "filt_skip_first",
-    "filt_load_errors",
-    "agg_minmax_scene_dates",
-    "src_dir_listing",
-    "src_station_txt",
-    "src_json_metadata",
-    "proj_scene_date_parse",
-    "join_scene_assets",
-    "join_gt_lookup",
-    "join_station_dim",
-    "map_bt_pixels",
-    "map_concat_features",
-    "domain_pipeline_summary",
-    "filt_sentinel_gt",
-    "agg_domain_grouped",
-    "src_pt_tensor",
-    "proj_scene_id_from_filename",
-    "proj_date_parts_csv",
-    "agg_count",
-]
-
-# Historical r4 order kept for reference (drove CORRECTNESS_r04).
-_ROUND4_FRONT = [
-    # never driver-checked (21 oracled + 4 rows-only by design)
-    "stream_stateful_user_totals",
-    "mm_decode_stats",
-    "mm_type_summary",
-    "mm_resize_plan",
-    "mm_frame_sample",
-    "mm_feature_extract",
-    "aug_rot90",
-    "aug_explode_4x",
-    "aug_jitter_date",
-    "aug_geo_shift",
-    "split_train_test",
-    "aug_train_pipeline",
-    "sim_lsh_topk",
-    "emb_label_stats",
-    "pack_chunks",
-    "llm_data_pipeline",
-    "text_bigram_lm_score",
-    "join_asof",
-    "events_funnel",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q13_order_histogram",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "sql_q1_pricing_summary",
-    # r1-verified re-confirmation fill (25)
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "agg_summary_stats",
-    "agg_count_distinct",
-    "agg_rollup",
-    "agg_cube",
-    "agg_grouping_sets",
-    "join_semi",
-    "join_anti",
-    "join_outer_coalesce",
-    "window_rank",
-    "window_lag_lead",
-    "window_running_sum",
-    "window_range_frame",
-    "ext_topk",
-    "sort_limit",
-    "setop_union",
-    "events_tumbling",
-    "events_session",
-    "ext_dedup_exact",
-    "dedup_jaccard_pairs",
-]
-
 
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: _wrap(name, spec.fn) for name, spec in all_queries().items()}

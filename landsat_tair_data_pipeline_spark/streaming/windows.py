@@ -919,8 +919,7 @@ FROM d GROUP BY 1
         "stream_stateful_user_totals", stream_stateful_user_totals, _STATEFUL_SQL
     ),
     # r8: streaming SCD2 upsert — oracled against the SAME batch
-    # lead()-window SQL as scd2_user_history (fronted via
-    # _ROUND8_FRONT), so the custom stateful operator is hash-gated
-    # end to end, not rows-only
+    # lead()-window SQL as scd2_user_history, so the custom stateful
+    # operator is hash-gated end to end, not rows-only
     "stream_scd2": QuerySpec("stream_scd2", stream_scd2, _BATCH_SCD2_SQL),
 }

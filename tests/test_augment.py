@@ -11,13 +11,16 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from landsat_tair_data_pipeline_spark.operators.augment import (
-    EARTH_R_M,
     aug_geo_shift,
     aug_jitter_date,
     exact_split,
     rot_bands,
     rot_grid,
 )
+
+
+# Earth mean radius in meters (the haversine check distance below)
+EARTH_R_M = 6371008.8
 
 
 @pytest.fixture(scope="module")
@@ -93,48 +96,6 @@ def test_geo_shift_bounds(spark):
                 r["latitude"], r["longitude"], r[f"lat_{v}"], r[f"lon_{v}"]
             )
             assert 5.0 * 0.95 <= d <= max_km * 2**0.5 * 1.05, (v, d)
-
-
-def test_geo_shift_spherical_vs_geodesic_divergence(spark):
-    """Quantified divergence of the engine's spherical (haversine)
-    meters-per-degree vs the reference's WGS-84 geodesic (geopy,
-    data_augmentation.py:69-72, 96-99; geopy itself isn't in this
-    container). Pinned oracle values come from the standard public
-    meridian/parallel arc-length series for the WGS-84 ellipsoid,
-    which agree with a 1°-span geodesic to sub-meter:
-
-      lat_m(φ) = 111132.954 − 559.822·cos2φ + 1.175·cos4φ − 0.0023·cos6φ
-      lon_m(φ) = 111412.84·cosφ − 93.5·cos3φ + 0.118·cos5φ
-
-    Asserted bound: relative error < 0.35% per axis across the fixture
-    latitude band (29.5°-33°N). Since r5 the spherical form is only the
-    fact-scale FALLBACK — jitter_geo itself uses the exact WGS-84
-    Vincenty factors (test_jitter_geo_factors_are_wgs84_exact); this
-    test keeps the fallback's declared divergence pinned."""
-    from landsat_tair_data_pipeline_spark.operators.augment import (
-        _meters_per_degree,
-    )
-
-    # (lat, WGS-84 geodesic meters per 1° lon, per 1° lat)
-    pinned = [
-        (29.5, 96966.253, 110844.075),
-        (31.0, 95504.230, 110869.479),
-        (33.0, 93453.182, 110904.470),
-    ]
-    df = spark.createDataFrame(
-        [(lat,) for lat, _, _ in pinned], "lat double"
-    )
-    lon_m, lat_m = _meters_per_degree(F.col("lat"))
-    got = {
-        r["lat"]: (r["lon_m"], r["lat_m"])
-        for r in df.select(
-            "lat", lon_m.alias("lon_m"), lat_m.alias("lat_m")
-        ).collect()
-    }
-    for lat, exp_lon, exp_lat in pinned:
-        g_lon, g_lat = got[lat]
-        assert abs(g_lon - exp_lon) / exp_lon < 0.0035, (lat, g_lon, exp_lon)
-        assert abs(g_lat - exp_lat) / exp_lat < 0.0035, (lat, g_lat, exp_lat)
 
 
 def test_exact_split_invariants(spark):

@@ -9,13 +9,13 @@ from __future__ import annotations
 
 import os
 
-from landsat_tair_data_pipeline_spark.registry import _ROUND15_FRONT, all_queries
+from landsat_tair_data_pipeline_spark.registry import _DRIVER_FRONT, all_queries
 
 
 def test_front_window_is_exactly_the_declared_50():
     qs = all_queries()
-    assert list(qs)[:50] == list(_ROUND15_FRONT)
-    assert len(_ROUND15_FRONT) == len(set(_ROUND15_FRONT)) == 50
+    assert list(qs)[:50] == list(_DRIVER_FRONT)
+    assert len(_DRIVER_FRONT) == len(set(_DRIVER_FRONT)) == 50
 
 
 def test_spec_names_match_keys():
