@@ -1660,48 +1660,26 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     Exact all-pairs baseline as a DISTRIBUTED block matrix product
     (the r1 version collected the whole table to the driver with
     toPandas + sc.broadcast — a driver OOM at scale; this one never
-    moves data through the driver). Square-grid self-join: each vector
-    gets a block id p = vec_id mod P; the "row" copy of block p is
+    moves data through the driver). Square-grid self-join, the
+    sim_knn_graph grid (similarity._block_grid): each vector gets a
+    block id p = vec_id mod P; the "row" copy of block p is
     replicated to every column j (group (p, j)) and the "column" copy
     to every row i (group (i, p)), so each unordered pair meets in
     exactly one of the P² groups, where an Arrow-batched applyInPandas
     runs one BLAS matmul per block pair — ~100× per-pair boxed JVM dot
     products (measured r1). Shuffle volume is 2·n·P rows (linear in n;
-    P grows ~ n·d/executor-mem so each A/B block fits a worker — the
-    knob Spark's own block-matrix multiply turns). Compute stays
-    quadratic by design (it is the exactness oracle); the 100 TB
+    similarity._grid_blocks grows P with n so no block holds more
+    than 4096 rows — the knob Spark's own block-matrix multiply
+    turns). Compute stays quadratic by design (it is the exactness
+    oracle); the 100 TB
     CANDIDATE path is sign-LSH buckets (sim_lsh_buckets/sim_lsh_topk),
     the IVF coarse quantizer (sim_ivf_topk), or — since r12 — the
     cell-blocked SemDeDup drop-list (dedup_semdedup) when the goal is
     dedup rather than a pair listing.
     """
-    # Block-grid fan-out derived, not hardcoded: P² block pairs ≈ 2×
-    # the cluster's parallelism keeps every core busy without shrinking
-    # blocks below BLAS-efficient sizes. On a real cluster P must also
-    # satisfy the memory bound (n/P)·d·8B ≤ executor working memory —
-    # the n-dependent term; defaultParallelism scales with executors,
-    # which tracks corpus size under normal sizing, and
-    # SPARK_GRAFT_COSINE_BLOCKS overrides when it doesn't.
-    import math
-    import os
+    from .similarity import _block_grid, _emb, _round_nudged, _sides, _unit_rows
 
-    dp = spark.sparkContext.defaultParallelism
-    P = int(
-        os.environ.get("SPARK_GRAFT_COSINE_BLOCKS", 0)
-    ) or max(2, round(math.sqrt(2 * dp)))
-
-    emb = table(spark, sf, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
-    grid = F.explode(F.sequence(F.lit(0), F.lit(P - 1)))
-    rows = emb.select(
-        "vec_id", "v", blk.alias("bi"), grid.alias("bj"), F.lit(0).alias("side")
-    )
-    cols = emb.select(
-        "vec_id", "v", grid.alias("bi"), blk.alias("bj"), F.lit(1).alias("side")
-    )
-    both = rows.unionByName(cols)
+    emb = _emb(spark, sf).select("vec_id", "v")
 
     def block(pdf):
         import numpy as np
@@ -1718,24 +1696,20 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
         )
         if len(a) == 0 or len(b) == 0:
             return empty
-        A = np.vstack(a["v"].to_numpy())
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        B = np.vstack(b["v"].to_numpy())
-        B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-        a_ids = a["vec_id"].to_numpy(dtype=np.int64)
-        b_ids = b["vec_id"].to_numpy(dtype=np.int64)
+        a_ids, A = _unit_rows(a)
+        b_ids, B = _unit_rows(b)
         C = A @ B.T
         # vec_a < vec_b dedups the pair across the two symmetric groups;
         # pre-filter with slack, exact filter on the rounded value
         # (matching the oracle's predicate)
         i, j = np.nonzero((C >= 0.4 - 1e-6) & (a_ids[:, None] < b_ids[None, :]))
-        cos = np.round(C[i, j] + 1e-9, 6)
+        cos = _round_nudged(C[i, j], 6)
         keep = cos >= 0.4
         return pd.DataFrame(
             {"vec_a": a_ids[i][keep], "vec_b": b_ids[j][keep], "cosine": cos[keep]}
         )
 
-    return both.groupBy("bi", "bj").applyInPandas(
+    return _sides(*_block_grid(emb)).groupBy("bq", "bc").applyInPandas(
         block, schema="vec_a bigint, vec_b bigint, cosine double"
     )
 
@@ -2744,7 +2718,7 @@ def _checkpoint(df: DataFrame) -> DataFrame:
 #   cluster-visible dir);
 # - _lazy (no cut) where one consumer reads the frame: v1/v2's gates
 #   plan into one job with their tail (v3 persists its gated base
-#   itself), and v4/v5's kept set feeds only the kept aggregate.
+#   itself), and v4's kept set feeds only the kept aggregate.
 _V1_STAGES = [
     ("n_after_exact", _exact_dedup, _lazy),
     ("n_kept", _quality_gate, _lazy),
@@ -2770,7 +2744,7 @@ _V5_STAGES = [
     ("n_after_exact", _exact_dedup, persist_tracked),
     ("n_after_quality", _entropy_floor, persist_tracked),
     ("n_after_containment", _containment_scrub, persist_tracked),
-    ("n_kept", _semantic_dedup, _lazy),
+    ("n_kept", _semantic_dedup, _checkpoint),
 ]
 _V6_STAGES = [
     ("n_after_domain", _domain_prefilter, persist_tracked),

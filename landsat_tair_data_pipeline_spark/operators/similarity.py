@@ -32,18 +32,105 @@ def _round_half_away(x: float, ndigits: int) -> float:
     """Driver-side mirror of F.round on doubles: Spark rounds
     BigDecimal(Double.toString(x)) HALF_UP, which
     Decimal(repr(x)).quantize(…, ROUND_HALF_UP) reproduces (ADVICE
-    r15 item 2: the old floor(|x|·10^p + 0.5) recipe disagrees with
+    r15 item 2: the floor(|x|·10^p + 0.5) recipe disagrees with
     F.round on exact decimal ties, e.g. 0.0002445 → 0.000244 vs
     Spark's 0.000245, because the float product lands an ulp below
-    the tie). The numpy KERNELS keep the floor recipe for speed;
-    their equivalence rests on the house +1e-9/+1e-10 nudges pushing
-    every compared value off exact decimal ties — documented at each
-    kernel. Python's built-in round() is banker's and would disagree
-    on every exact .5."""
+    the tie). The numpy kernels use the floor recipe for speed, only
+    through _round_nudged, which states why it agrees. Python's
+    built-in round() is banker's and would disagree on every exact
+    .5."""
     from decimal import ROUND_HALF_UP, Decimal
 
     q = Decimal(1).scaleb(-ndigits)
     return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def _round_nudged(x, ndigits: int):
+    """numpy twin of the engines' ROUND(x + 1e-9, ndigits), for every
+    vector kernel: add the house +1e-9 nudge, then round half away
+    from zero as sign(x)·floor(|x|·10^p + 0.5)/10^p (np.round is
+    banker's half-to-even — ADVICE r10).
+
+    Why the floor recipe agrees with F.round, which rounds
+    BigDecimal(Double.toString(x)) HALF_UP: the two differ only when
+    |x|·10^p lands within its float error (~1e-16 relative) of a .5
+    tie. The values that sit on an exact decimal tie are short
+    decimals, such as 0.0002445 at 6 dp. The nudge shifts every value
+    by +1e-9, so such a value now sits 10^(p−9) off its tie in scaled
+    units (1e-3 at 6 dp, 0.1 at 8 dp), far above that float error for
+    any |x| below ~10^6. A value still lands on a tie only by sitting
+    exactly 1e-9 below one, the same residue the Spark and DuckDB
+    twins share. Non-negative values such as distances need the nudge
+    too: 0.0002445 is positive and still rounds down without it."""
+    import numpy as np
+
+    x = x + 1e-9
+    s = float(10**ndigits)
+    return np.sign(x) * np.floor(np.abs(x) * s + 0.5) / s
+
+
+def _sq_dists(X, C):
+    """ROUND(Σ(x − c)² + 1e-9, 6) for every row of X against every row
+    of C — the direct difference form, never |x|² − 2x·c + |c|², so
+    the cancellation profile matches the dim-stream oracles."""
+    return _round_nudged(((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2), 6)
+
+
+def _vectors(pdf):
+    """(vec_id array, n × d float64 matrix) of one pandas batch: the
+    one decode of the `v` array column."""
+    import numpy as np
+
+    return pdf["vec_id"].to_numpy(dtype=np.int64), np.vstack(pdf["v"].to_numpy())
+
+
+def _vector_batches(batches):
+    """(vids, X) for every non-empty batch of a mapInPandas kernel
+    over (vec_id, v) rows."""
+    for pdf in batches:
+        if len(pdf):
+            yield _vectors(pdf)
+
+
+def _unit_rows(pdf):
+    """_vectors with every row scaled to unit L2 norm (a zero row
+    stays zero), so a matmul of two blocks is their cosine matrix."""
+    import numpy as np
+
+    ids, X = _vectors(pdf)
+    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
+    return ids, X
+
+
+def _cosine(a: str, b: str) -> Column:
+    """Engine twin of _COS_SQL: the rounded cosine of the array
+    columns ``a`` and ``b``."""
+    x, y = F.col(a), F.col(b)
+    return F.round(
+        _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y))) + 1e-9, 6
+    )
+
+
+def _query_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best (query_id, cand_id, cosine) rows per query under
+    (cosine desc, cand_id asc), with their long ``rank``."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
+        F.col("rank") <= k
+    )
+
+
+def _lsh_bucket() -> Column:
+    """Sign-LSH bucket of the `v` column: bit i set when coordinate
+    i+1 ≥ 0, over the first 8 dims (hyperplanes = coordinate axes)."""
+    bits = [
+        F.when(F.element_at("v", i + 1) >= 0, F.lit(1 << i)).otherwise(0)
+        for i in range(8)
+    ]
+    bucket = bits[0]
+    for b in bits[1:]:
+        bucket = bucket + b
+    return bucket
 
 
 def _emb(spark: SparkSession, sf: str) -> DataFrame:
@@ -80,20 +167,13 @@ def _exact_topk(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"))
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
     scored = (
         F.broadcast(q)
         .crossJoin(c)
         .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.round(cos + 1e-9, 6).alias("cosine"))
+        .select("query_id", "cand_id", _cosine("qv", "cv").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-    )
+    return _query_topk(scored, k)
 
 
 _SIM_SEARCH_SQL = """
@@ -119,15 +199,8 @@ def sim_lsh_buckets(spark: SparkSession, sf: str) -> DataFrame:
     report bucket occupancy + per-bucket centroid norm as the checkable
     surface."""
     emb = _emb(spark, sf)
-    bits = [
-        F.when(F.element_at("v", i + 1) >= 0, F.lit(1 << i)).otherwise(0)
-        for i in range(8)
-    ]
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
     return (
-        emb.withColumn("bucket", bucket.cast("long"))
+        emb.withColumn("bucket", _lsh_bucket().cast("long"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -167,32 +240,18 @@ def sim_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     query's bucket, exact cosine re-rank inside. Same bucket function
     as sim_lsh_buckets → deterministic, oracle-checked recall surface."""
     emb = _emb(spark, sf)
-    bits = [
-        F.when(F.element_at("v", i + 1) >= 0, F.lit(1 << i)).otherwise(0)
-        for i in range(8)
-    ]
-    bucket = bits[0]
-    for b in bits[1:]:
-        bucket = bucket + b
-    emb = emb.withColumn("bucket", bucket.cast("long"))
+    emb = emb.withColumn("bucket", _lsh_bucket().cast("long"))
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), "bucket"
     )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"), "bucket")
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
     scored = (
         F.broadcast(q)
         .join(c, "bucket")
         .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.round(cos + 1e-9, 6).alias("cosine"))
+        .select("query_id", "cand_id", _cosine("qv", "cv").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    return _query_topk(scored, 5)
 
 
 _LSH_TOPK_SQL = """
@@ -301,34 +360,16 @@ def _house_ivf_topk(
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     ranked = persist_tracked(_ivf_graph_ranked(spark, sf))
-    probers = ranked.where(F.col("vec_id") < n_queries).join(
-        emb, "vec_id"
-    ).select(
-        F.col("cid").alias("cell"), "vec_id", "v", F.lit(0).alias("side")
-    )
+    probers = _cell_rows(ranked.where(F.col("vec_id") < n_queries), emb)
     probed_cells = probers.select("cell").distinct()
-    members = (
-        ranked.where(F.col("rk") == 1)
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(1).alias("side")
-        )
-        .join(F.broadcast(probed_cells), "cell", "left_semi")
+    members = _cell_rows(ranked.where(F.col("rk") == 1), emb).join(
+        F.broadcast(probed_cells), "cell", "left_semi"
     )
-    local = probers.unionByName(members).groupBy("cell").applyInPandas(
-        _cell_block_topk(k),
-        schema="vec_id bigint, nn_id bigint, cosine double",
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("nn_id").alias("cand_id"),
-            "cosine",
-            "rank",
-        )
+    return _cell_join(probers, members, ["cell"], k).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("nn_id").alias("cand_id"),
+        "cosine",
+        "rank",
     )
 
 
@@ -365,20 +406,13 @@ def _ivf_topk(spark: SparkSession, sf: str, n_queries: int) -> DataFrame:
     c = assigned.select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv"), "cell"
     )
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv"))) * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
     scored = (
         F.broadcast(probed.select("query_id", "qv", "cell"))
         .join(c, "cell")
         .where(F.col("query_id") != F.col("cand_id"))
-        .select("query_id", "cand_id", F.round(cos + 1e-9, 6).alias("cosine"))
+        .select("query_id", "cand_id", _cosine("qv", "cv").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= 5)
-    )
+    return _query_topk(scored, 5)
 
 
 def emb_quantize_int8(spark: SparkSession, sf: str) -> DataFrame:
@@ -686,12 +720,9 @@ def emb_pca_power(spark: SparkSession, sf: str) -> DataFrame:
             import numpy as np
             import pandas as pd
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.vstack(pdf["v"].to_numpy()) - mu[None, :]
-                u = X @ v + 1e-9
-                u = np.floor(np.abs(u) * 1e8 + 0.5) / 1e8 * np.sign(u)
+            for _, X in _vector_batches(batches):
+                X = X - mu[None, :]
+                u = _round_nudged(X @ v, 8)
                 pw = X.T @ u  # (d,) partial of Σ_vec (x−mu)·u
                 yield pd.DataFrame(
                     {"d": np.arange(1, len(pw) + 1), "w": pw}
@@ -929,14 +960,10 @@ def emb_kmeans_converged(spark: SparkSession, sf: str) -> DataFrame:
             import numpy as np
             import pandas as pd
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                X = np.vstack(pdf["v"].to_numpy())
-                # rounded squared L2 to every centroid; argmin ties
-                # break to the lowest cid because cids are sorted
-                d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2) + 1e-9
-                d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
+            for _, X in _vector_batches(batches):
+                # argmin ties break to the lowest cid because cids are
+                # sorted
+                d2 = _sq_dists(X, C)
                 j = d2.argmin(axis=1)
                 dist = d2[np.arange(len(X)), j]
                 out = {"cid": [], "d": [], "s": [], "cnt": [], "sdist": []}
@@ -1053,16 +1080,10 @@ def _pq_codebook_block(emb: DataFrame):
 
 
 def _pq_sub_dists(X, C, s):
-    """Rounded squared distances of the rows of X to every codebook
-    row, within subspace ``s`` — the shared kernel formula: direct
-    (x−c)² sum over the subspace dims, +1e-9 nudge, half-away-from-
-    zero 6dp (distances are non-negative, so floor(x·1e6+0.5) IS the
-    F.round mirror — the house numpy recipe)."""
-    import numpy as np
-
+    """Rounded squared distances (_sq_dists) of the rows of X to every
+    codebook row, within subspace ``s``."""
     sl = slice(s * _PQ_SUBDIM, (s + 1) * _PQ_SUBDIM)
-    d2 = ((X[:, sl][:, None, :] - C[None, :, sl]) ** 2).sum(axis=2) + 1e-9
-    return np.floor(d2 * 1e6 + 0.5) / 1e6
+    return _sq_dists(X[:, sl], C[:, sl])
 
 
 def _pq_best(emb: DataFrame, C) -> DataFrame:
@@ -1089,11 +1110,7 @@ def _pq_best(emb: DataFrame, C) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["v"].to_numpy())
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        for vids, X in _vector_batches(batches):
             n = len(X)
             dist_cols = np.empty((n, nsub))
             code_cols = np.empty((n, nsub), dtype=np.int32)
@@ -1324,16 +1341,8 @@ def _pq_search_ranked(
     Q = np.vstack([np.asarray(r["v"], dtype=np.float64) for r in probes])
 
     def exact_partials(batches, Q=Q, qids=qids):
-        import numpy as np
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["v"].to_numpy())
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            d2 = ((X[:, None, :] - Q[None, :, :]) ** 2).sum(axis=2) + 1e-9
-            d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
-            yield _pq_partial_topk_pdf(d2, vids, qids, _ADC_K)
+        for vids, X in _vector_batches(batches):
+            yield _pq_partial_topk_pdf(_sq_dists(X, Q), vids, qids, _ADC_K)
 
     exd = emb.select("vec_id", "v").mapInPandas(
         exact_partials, schema="query_id long, vec_id long, dist double"
@@ -1355,21 +1364,17 @@ def _pq_search_ranked(
     def adc_partials(batches, C=C, tab=tab, qids=qids, nsub=nsub):
         import numpy as np
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["v"].to_numpy())
-            vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            n = len(X)
-            ad = np.zeros((n, len(qids)))
+        for vids, X in _vector_batches(batches):
+            ad = np.zeros((len(X), len(qids)))
             for s in range(nsub):
                 codes0 = np.argmin(_pq_sub_dists(X, C, s), axis=1)
                 # table lookup: (nq, n) slice of this sub's pdist rows
                 ad += tab[:, s, :][:, codes0].T
             # 4 already-6dp-rounded terms: re-round so last-ULP
             # summation noise can't diverge between engines
-            ad = np.floor((ad + 1e-9) * 1e6 + 0.5) / 1e6
-            yield _pq_partial_topk_pdf(ad, vids, qids, _ADC_K, col="adist")
+            yield _pq_partial_topk_pdf(
+                _round_nudged(ad, 6), vids, qids, _ADC_K, col="adist"
+            )
 
     adcd = emb.select("vec_id", "v").mapInPandas(
         adc_partials, schema="query_id long, vec_id long, adist double"
@@ -1739,86 +1744,39 @@ def sim_knn_graph(spark: SparkSession, sf: str) -> DataFrame:
     probe's kernel split shows the cost is in-worker compute
     (matmul + the stable full-row argsort), not the Arrow exchange —
     the n·P·k emit keeps the post-matmul shuffle negligible."""
-    import math
-    import os
-
     emb = _emb(spark, sf).select("vec_id", "v")
-    dp = spark.sparkContext.defaultParallelism
-    # Block count: enough groups for the cores, AND a hard cap on
-    # block ROW size — each group materializes an (n/P)² float64
-    # cosine matrix, so P must grow LINEARLY with n beyond the point
-    # where sqrt(2·cores) blocks leave >4096 rows per block (4096² ×
-    # 8 B ≈ 134 MB per task; the r10 sqrt-only sizing would have built
-    # a 5 GB matrix per task at the 100× probe's 200k vectors). The
-    # count() is parquet-metadata-cheap and keeps the sizing
-    # data-driven rather than config-guessed. Group count grows as
-    # (n/4096)² — the exact-quadratic compute is this op's stated
-    # ground-truth contract; see the 100× probe + IVF/PQ handoff note
-    # below.
-    n = emb.count()
-    P = int(os.environ.get("SPARK_GRAFT_COSINE_BLOCKS", 0)) or max(
-        2, round(math.sqrt(2 * dp)), math.ceil(n / 4096)
+    return _cell_join(*_block_grid(emb), ["bq", "bc"], _KNN_K).select(
+        "vec_id", "nn_id", "rank", "cosine"
     )
+
+
+def _grid_blocks(n: int, dp: int) -> int:
+    """Block count P of the P² square grid for n vectors on dp cores:
+    enough groups for the cores, AND a hard cap on block ROW size —
+    each group materializes an (n/P)² float64 cosine matrix, so P
+    grows LINEARLY with n once sqrt(2·cores) blocks would leave >4096
+    rows per block (4096² × 8 B ≈ 134 MB per task; the r10 sqrt-only
+    sizing would have built a 5 GB matrix per task at the 100×
+    probe's 200k vectors). Group count grows as (n/4096)² — the
+    exact-quadratic compute is the grid keys' stated contract."""
+    import math
+
+    return max(2, round(math.sqrt(2 * dp)), math.ceil(n / 4096))
+
+
+def _block_grid(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The square-grid self-join's two sides over (vec_id, v) rows:
+    block p = vec_id mod P; the query copy of block p is replicated
+    to every column group (p, j) and the candidate copy to every row
+    group (i, p), so every ordered pair meets in exactly one of the
+    P² (bq, bc) groups. P comes from _grid_blocks over the live
+    count() (parquet-metadata-cheap), so the sizing is data-driven."""
+    P = _grid_blocks(emb.count(), emb.sparkSession.sparkContext.defaultParallelism)
     blk = F.pmod(F.col("vec_id"), F.lit(P)).cast("int")
     grid = F.explode(F.sequence(F.lit(0), F.lit(P - 1)))
-    q = emb.select(
-        "vec_id", "v", blk.alias("bq"), grid.alias("bc"), F.lit(0).alias("side")
-    )
-    c = emb.select(
-        "vec_id", "v", grid.alias("bq"), blk.alias("bc"), F.lit(1).alias("side")
-    )
-    both = q.unionByName(c)
-    k = _KNN_K
-
-    def block(pdf):
-        import numpy as np
-        import pandas as pd
-
-        a = pdf[pdf["side"] == 0]
-        b = pdf[pdf["side"] == 1]
-        empty = pd.DataFrame(
-            {
-                "vec_id": np.array([], dtype=np.int64),
-                "nn_id": np.array([], dtype=np.int64),
-                "cosine": np.array([], dtype=np.float64),
-            }
-        )
-        if len(a) == 0 or len(b) == 0:
-            return empty
-        # candidate columns ordered by id: a STABLE descending-cosine
-        # argsort then breaks ties by ascending nn_id, the global order
-        b = b.sort_values("vec_id")
-        A = np.vstack(a["v"].to_numpy())
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        B = np.vstack(b["v"].to_numpy())
-        B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-        a_ids = a["vec_id"].to_numpy(dtype=np.int64)
-        b_ids = b["vec_id"].to_numpy(dtype=np.int64)
-        # half-away-from-zero to 6 dp, matching Spark ROUND / DuckDB
-        # ROUND (ADVICE r10: np.round is banker's half-to-even — the
-        # one rounding mode in the repo that differed from its oracle;
-        # cosines here are in [-1, 1] so the sign split is exact)
-        raw = A @ B.T + 1e-9
-        cos = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-        cos[a_ids[:, None] == b_ids[None, :]] = -2.0  # exclude self
-        kk = min(k, cos.shape[1])
-        order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-        rows = np.repeat(a_ids, kk)
-        nn = b_ids[order].ravel()
-        cs = np.take_along_axis(cos, order, axis=1).ravel()
-        keep = cs > -2.0
-        return pd.DataFrame(
-            {"vec_id": rows[keep], "nn_id": nn[keep], "cosine": cs[keep]}
-        )
-
-    local = both.groupBy("bq", "bc").applyInPandas(
-        block, schema="vec_id bigint, nn_id bigint, cosine double"
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
     return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "nn_id", "rank", "cosine")
+        emb.select("vec_id", "v", blk.alias("bq"), grid.alias("bc")),
+        emb.select("vec_id", "v", grid.alias("bq"), blk.alias("bc")),
     )
 
 
@@ -1860,14 +1818,10 @@ def _ivf_cells(n: int) -> int:
     ships quadratic jobs). Derived from the live corpus count and
     mirrored exactly in the DuckDB oracles via _IVF_CELLS_SQL, so the
     driver hash check covers the derived-k path. math.sqrt is IEEE
-    correctly rounded, matching the oracle's SQRT bit-for-bit.
-    SPARK_GRAFT_IVF_CELLS still overrides for scale probes (engine
-    side only — probes never compare against the oracle)."""
+    correctly rounded, matching the oracle's SQRT bit-for-bit."""
     import math
-    import os
 
-    env = int(os.environ.get("SPARK_GRAFT_IVF_CELLS", 0))
-    return env or max(_IVF_GRAPH_CELLS_FLOOR, math.ceil(math.sqrt(n)))
+    return max(_IVF_GRAPH_CELLS_FLOOR, math.ceil(math.sqrt(n)))
 
 
 def _ivf_graph_ranked(spark: SparkSession, sf: str) -> DataFrame:
@@ -1949,20 +1903,11 @@ def _ranked_cells(emb: DataFrame, seed_src: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.vstack(pdf["v"].to_numpy())
-            all_vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            m = min(nprobe, len(cids))
-            # same direct (x−c)² formula as the old aggregate (no
-            # sum-of-squares expansion — keeps the cancellation
-            # profile identical-class)
+        m = min(nprobe, len(cids))
+        for all_vids, X in _vector_batches(batches):
             for lo in range(0, len(X), rpc):
                 hi = min(lo + rpc, len(X))
-                d2 = ((X[lo:hi, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                d2 = d2 + 1e-9
-                d2 = np.floor(d2 * 1e6 + 0.5) / 1e6
+                d2 = _sq_dists(X[lo:hi], C)
                 order = np.argsort(d2, axis=1, kind="stable")[:, :m]
                 yield pd.DataFrame(
                     {
@@ -1989,15 +1934,13 @@ def _kernel_rows_per_chunk(k: int, d: int, budget_bytes: int = 64 << 20) -> int:
 
 
 def _cell_block_topk(k: int):
-    """Shared per-cell BLAS kernel for the IVF family (sim_knn_graph_ivf
-    and sim_ann_cross_join): queries are the rows with side=0, members
-    side=1; one normalized matmul per cell group, emitting each query's
-    block-local top-k by rounded cosine (6dp half-away-from-zero with
-    the +1e-9 nudge — np.round is banker's, the ADVICE r10 lesson),
-    tie-broken by ascending member id via a stable argsort over
-    id-sorted columns. Self-pairs (same id on both sides) are excluded;
-    cross-corpus callers have disjoint ids, so the mask is a no-op
-    there."""
+    """Per-group BLAS kernel of the cell join (_cell_join): queries are
+    the rows with side=0, members side=1; one normalized matmul per
+    group, emitting each query's block-local top-k by rounded cosine
+    (_round_nudged at 6dp), tie-broken by ascending member id via a
+    stable argsort over id-sorted columns. Self-pairs (same id on
+    both sides) are excluded; cross-corpus callers have disjoint ids,
+    so the mask is a no-op there."""
 
     def block(pdf):
         import numpy as np
@@ -2016,16 +1959,9 @@ def _cell_block_topk(k: int):
             return empty
         # candidate columns ordered by id: a STABLE descending-cosine
         # argsort then breaks ties by ascending nn_id (global order)
-        b = b.sort_values("vec_id")
-        A = np.vstack(a["v"].to_numpy())
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        B = np.vstack(b["v"].to_numpy())
-        B /= np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-300)
-        a_ids = a["vec_id"].to_numpy(dtype=np.int64)
-        b_ids = b["vec_id"].to_numpy(dtype=np.int64)
-        # half-away-from-zero at 6dp (np.round is banker's — ADVICE r10)
-        raw = A @ B.T + 1e-9
-        cos = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
+        a_ids, A = _unit_rows(a)
+        b_ids, B = _unit_rows(b.sort_values("vec_id"))
+        cos = _round_nudged(A @ B.T, 6)
         cos[a_ids[:, None] == b_ids[None, :]] = -2.0  # exclude self
         kk = min(k, cos.shape[1])
         order = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
@@ -2038,6 +1974,43 @@ def _cell_block_topk(k: int):
         )
 
     return block
+
+
+def _sides(queries: DataFrame, members: DataFrame) -> DataFrame:
+    """One frame of both sides of a block kernel: queries tagged
+    side=0, members side=1."""
+    return queries.withColumn("side", F.lit(0)).unionByName(
+        members.withColumn("side", F.lit(1))
+    )
+
+
+def _cell_rows(ranked: DataFrame, emb: DataFrame) -> DataFrame:
+    """(cell, vec_id, v) rows of ranked (vec_id, cid, …) cell entries
+    — one side of an IVF cell join."""
+    return ranked.join(emb, "vec_id").select(
+        F.col("cid").alias("cell"), "vec_id", "v"
+    )
+
+
+def _cell_join(
+    queries: DataFrame, members: DataFrame, keys: list[str], k: int
+) -> DataFrame:
+    """Top-k cosine neighbors of every query among the members that
+    share its group ``keys`` — the local-top-k-then-global-merge shape
+    of distributed top-k search. Both sides are (keys…, vec_id, v)
+    rows; each group runs _cell_block_topk(k), and a per-query window
+    over the ≤ groups·k block-local rows keeps the global top-k under
+    (cosine desc, nn_id asc). A block's local top-k is a superset of
+    its members in the global top-k, so the merge is exact. Returns
+    (vec_id, nn_id, cosine, rank)."""
+    local = _sides(queries, members).groupBy(*keys).applyInPandas(
+        _cell_block_topk(k),
+        schema="vec_id bigint, nn_id bigint, cosine double",
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
+    return local.withColumn("rank", F.row_number().over(w).cast("long")).where(
+        F.col("rank") <= k
+    )
 
 
 def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
@@ -2063,11 +2036,10 @@ def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
     shuffle once (n rows), probers nprobe× (2n rows), and each cell
     group runs ONE BLAS matmul over |probers(cell)| × |members(cell)|
     emitting only its block-local top-k per prober (the sim_knn_graph
-    kernel, minus the P² grid): compute is Σ_cell p_c·m_c ≈
-    nprobe·n²/k_cells — and because k_cells = max(16, ⌈√n⌉) BY
-    DEFAULT (r13: the faiss rule moved from the SPARK_GRAFT_IVF_CELLS
-    env knob into the code path the oracle certifies), the scan is
-    O(n^1.5) out of the box, with the post-matmul shuffle at
+    cell join, minus the P² grid): compute is Σ_cell p_c·m_c ≈
+    nprobe·n²/k_cells — and because k_cells = max(16, ⌈√n⌉) (the
+    faiss rule, in the code path the oracle certifies), the scan is
+    O(n^1.5), with the post-matmul shuffle at
     n·nprobe·k rows. The final window merges each vector's ≤ nprobe·k
     block-local rows.
 
@@ -2082,27 +2054,10 @@ def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     ranked = persist_tracked(_ivf_graph_ranked(spark, sf))
-    members = (
-        ranked.where(F.col("rk") == 1)
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(1).alias("side")
-        )
-    )
-    probers = ranked.join(emb, "vec_id").select(
-        F.col("cid").alias("cell"), "vec_id", "v", F.lit(0).alias("side")
-    )
-    both = probers.unionByName(members)
-    local = both.groupBy("cell").applyInPandas(
-        _cell_block_topk(_KNN_K),
-        schema="vec_id bigint, nn_id bigint, cosine double",
-    )
-    k = _KNN_K
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("vec_id", "nn_id", "rank", "cosine")
+    members = _cell_rows(ranked.where(F.col("rk") == 1), emb)
+    probers = _cell_rows(ranked, emb)
+    return _cell_join(probers, members, ["cell"], _KNN_K).select(
+        "vec_id", "nn_id", "rank", "cosine"
     )
 
 
@@ -2380,9 +2335,8 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     rows), then each cell group runs one BLAS gram matmul and the
     vectorized first-qualifying-witness scan in-kernel — pair volume
     Σ_c m_c²/2 ≈ n²/(2·k_cells) never crosses a shuffle at all, and
-    k_cells = max(16, ⌈√n⌉) by default (r13 — the faiss sizing rule
-    is the code path, SPARK_GRAFT_IVF_CELLS now only overrides for
-    probes) making compute O(n^1.5). The kernel replaced an earlier JVM zip_with
+    k_cells = max(16, ⌈√n⌉) (_ivf_cells, the faiss sizing rule)
+    making compute O(n^1.5). The kernel replaced an earlier JVM zip_with
     pair join after the r12 100× probe priced that at ~5.6 µs/pair
     (191 s at 200k vectors) vs the BLAS shape's ~6× less — and it
     kills the pair-row shuffle entirely.
@@ -2390,9 +2344,8 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     Margin audit (r12, re-measured r13 under derived √n cells):
     output is non-vacuous at every sf (12 / 10 / 143 dropped at
     sf0.001/0.01/0.1);
-    cosine rounds half-away-from-zero at 6dp with the +1e-9 nudge
-    before BOTH the τ cut and the surface (np.round is banker's —
-    the ADVICE r10 lesson, same kernel recipe as sim_knn_graph);
+    cosine rounds through _round_nudged at 6dp before BOTH the τ cut
+    and the surface (the same rounding as every cosine kernel);
     witness ties cannot occur (first index over distinct sorted
     vec_ids); a singleton cell emits nothing in either engine; the
     kernel was cross-checked row-identical against the original
@@ -2421,11 +2374,8 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
         if len(pdf) < 2:
             return empty
         pdf = pdf.sort_values("vec_id")
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        A = np.vstack(pdf["v"].to_numpy())
-        A /= np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-300)
-        raw = A @ A.T + 1e-9
-        cos = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
+        ids, A = _unit_rows(pdf)
+        cos = _round_nudged(A @ A.T, 6)
         # qualifying witness = STRICTLY EARLIER (lower-id) member at
         # cosine >= tau; ids are sorted, so mask[w, v] with w < v is
         # the strict upper triangle of the thresholded gram matrix
@@ -2586,31 +2536,12 @@ def sim_ann_cross_join(spark: SparkSession, sf: str) -> DataFrame:
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     idx_side = emb.where(F.col("vec_id") % 2 == 0)
     ranked = persist_tracked(_ranked_cells(emb, idx_side))
-    members = (
-        ranked.where((F.col("rk") == 1) & (F.col("vec_id") % 2 == 0))
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(1).alias("side")
-        )
+    members = _cell_rows(
+        ranked.where((F.col("rk") == 1) & (F.col("vec_id") % 2 == 0)), emb
     )
-    probers = (
-        ranked.where(F.col("vec_id") % 2 == 1)
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(0).alias("side")
-        )
-    )
-    local = probers.unionByName(members).groupBy("cell").applyInPandas(
-        _cell_block_topk(_KNN_K),
-        schema="vec_id bigint, nn_id bigint, cosine double",
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= _KNN_K)
-        .select(
-            F.col("vec_id").alias("query_id"), "nn_id", "rank", "cosine"
-        )
+    probers = _cell_rows(ranked.where(F.col("vec_id") % 2 == 1), emb)
+    return _cell_join(probers, members, ["cell"], _KNN_K).select(
+        F.col("vec_id").alias("query_id"), "nn_id", "rank", "cosine"
     )
 
 
@@ -2676,12 +2607,8 @@ def sim_ann_cross_recall(spark: SparkSession, sf: str) -> DataFrame:
     c = emb.where(F.col("vec_id") % 2 == 0).select(
         F.col("vec_id").alias("cand_id"), F.col("v").alias("cv")
     )
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-        * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
     scored = F.broadcast(q).crossJoin(c).select(
-        "query_id", "cand_id", F.round(cos + 1e-9, 6).alias("cosine")
+        "query_id", "cand_id", _cosine("qv", "cv").alias("cosine")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "cand_id")
     exact = persist_tracked(
@@ -2764,12 +2691,8 @@ def sim_semantic_decontam(spark: SparkSession, sf: str) -> DataFrame:
     tr = emb.where(F.col("vec_id") >= _DECONTAM_EVAL_N).select(
         F.col("vec_id").alias("doc_id"), F.col("v").alias("cv")
     )
-    cos = _dot(F.col("qv"), F.col("cv")) / (
-        F.sqrt(_dot(F.col("qv"), F.col("qv")))
-        * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-    )
     scored = tr.crossJoin(F.broadcast(ev)).select(
-        "doc_id", "eval_id", F.round(cos + 1e-9, 6).alias("cosine")
+        "doc_id", "eval_id", _cosine("qv", "cv").alias("cosine")
     )
     # argmax as a map-side-combinable max(struct) aggregate instead of
     # a row_number window (optimization r15, guide §2.3/§2.4): the
@@ -2864,34 +2787,13 @@ def emb_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = emb.where(~shard_pred)
     ranked = persist_tracked(_ranked_cells(emb, corpus))
-    members = (
-        ranked.where((F.col("rk") == 1) & ~shard_pred)
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(1).alias("side")
-        )
-    )
-    probers = (
-        ranked.where(shard_pred)
-        .join(emb, "vec_id")
-        .select(
-            F.col("cid").alias("cell"), "vec_id", "v", F.lit(0).alias("side")
-        )
-    )
-    local = probers.unionByName(members).groupBy("cell").applyInPandas(
-        _cell_block_topk(1),
-        schema="vec_id bigint, nn_id bigint, cosine double",
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select(
-            F.col("vec_id").alias("shard_vec_id"),
-            F.col("nn_id").alias("best_corpus_id"),
-            "cosine",
-            (F.col("cosine") >= _SEMDEDUP_TAU).alias("is_dup"),
-        )
+    members = _cell_rows(ranked.where((F.col("rk") == 1) & ~shard_pred), emb)
+    probers = _cell_rows(ranked.where(shard_pred), emb)
+    return _cell_join(probers, members, ["cell"], 1).select(
+        F.col("vec_id").alias("shard_vec_id"),
+        F.col("nn_id").alias("best_corpus_id"),
+        "cosine",
+        (F.col("cosine") >= _SEMDEDUP_TAU).alias("is_dup"),
     )
 
 

@@ -12,11 +12,15 @@ from pyspark.sql import functions as F
 
 def test_round_half_away_matches_spark_round(spark):
     """_round_half_away is the driver-side mirror of F.round on
-    doubles (HALF_UP). Checked on a grid including negatives, exact
-    .5 ties at the target scale, and the engine's +1e-9-nudged
+    doubles (HALF_UP), and _round_nudged, the kernels' numpy recipe,
+    mirrors F.round(x + 1e-9). Checked on a grid including negatives,
+    exact .5 ties at the target scale, and the engine's +1e-9-nudged
     values."""
+    import numpy as np
+
     from landsat_tair_data_pipeline_spark.operators.similarity import (
         _round_half_away,
+        _round_nudged,
     )
 
     vals = [
@@ -43,6 +47,12 @@ def test_round_half_away_matches_spark_round(spark):
         got = [r["r"] for r in df.select(F.round("x", nd).alias("r")).collect()]
         exp = [_round_half_away(v, nd) for v in vals]
         assert got == pytest.approx(exp, abs=0.0), (nd, vals, got, exp)
+        nudged = [
+            r["r"]
+            for r in df.select(F.round(F.col("x") + 1e-9, nd).alias("r")).collect()
+        ]
+        kern = _round_nudged(np.array(vals), nd).tolist()
+        assert kern == pytest.approx(nudged, abs=0.0), (nd, vals, kern, nudged)
 
 
 def test_ranked_cells_matches_dimstream_reference(spark):

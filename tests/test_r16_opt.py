@@ -35,6 +35,22 @@ def test_kernel_rows_per_chunk_byte_bound():
     assert _kernel_rows_per_chunk(31623, 64) * 31623 * 64 * 8 <= budget
 
 
+def test_grid_blocks_row_bound():
+    """The P² square grid (sim_knn_graph, dedup_embedding_cosine) caps
+    block ROW size at 4096: at the 100× probe's 200k vectors on 32
+    cores, the sqrt-only count P = 8 would give 25k-row blocks, a
+    25k × 25k float64 matrix per task."""
+    from landsat_tair_data_pipeline_spark.operators.similarity import (
+        _grid_blocks,
+    )
+
+    P = _grid_blocks(200_000, 32)
+    assert math.ceil(200_000 / P) <= 4096, P
+    # small corpora keep the core-driven count
+    assert _grid_blocks(6000, 4) == 3
+    assert _grid_blocks(100, 1) == 2
+
+
 def test_ranked_cells_chunked_yield_matches_reference(spark):
     """The byte-bounded, per-chunk-yield kernel must produce the same
     (vec_id, cid, rk) rows as a single-shot numpy reference — chunking

@@ -3,12 +3,13 @@
 
 Promotes the round-7 drift-adjudication protocol (NOTES.md "BENCH DRIFT
 IS ENVIRONMENTAL") into a committed tool, so a cross-round wall-clock
-gap can be attributed mechanically: check the old commit out into a git
-worktree, run the SAME microbench protocol against both checkouts in
-fresh subprocesses (separate JVMs) on the SAME machine minutes apart,
-and emit per-key ratios. ratio ≈ 1.0 on every key → the cross-round
-gap is environmental; a key whose HEAD time is >1.5x the pinned commit
-under identical conditions is a real code regression.
+gap can be attributed mechanically: extract the old commit into a
+temporary directory (git archive), run the SAME microbench protocol
+against both checkouts in fresh subprocesses (separate JVMs) on the
+SAME machine minutes apart, and emit per-key ratios. ratio ≈ 1.0 on
+every key → the cross-round gap is environmental; a key whose HEAD
+time is >1.5x the pinned commit under identical conditions is a real
+code regression.
 
 Usage:
     python tools/ab_bench.py --base <commit> [--keys k1,k2,...]
@@ -26,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -108,7 +110,13 @@ def _run_side(checkout: str, keys: list[str], reps: int, sf_dir: str) -> dict:
         )
         for line in proc.stdout.splitlines():
             if line.startswith("ABJSON:"):
-                return json.loads(line[len("ABJSON:") :])
+                times = json.loads(line[len("ABJSON:") :])
+                if None in times.values():
+                    # a key that raised reads null: show why
+                    for err in proc.stderr.splitlines():
+                        if err.startswith("AB FAILURE"):
+                            print(f"{checkout}: {err}", file=sys.stderr)
+                return times
         raise RuntimeError(
             f"no ABJSON line from {checkout}; stderr tail: {proc.stderr[-500:]}"
         )
@@ -128,48 +136,25 @@ def main() -> None:
     args = ap.parse_args()
     keys = [k for k in args.keys.split(",") if k]
 
-    # key the worktree on the RESOLVED full SHA (refs with '/' or a
-    # shared 12-char prefix must not collide), and verify a reused
-    # directory actually sits at that SHA — a stale/foreign checkout
-    # silently benchmarked as "base" would attribute drift to the
-    # wrong side, the exact failure this tool exists to rule out
-    # (r8 review finding)
     sha = subprocess.run(
         ["git", "-C", REPO, "rev-parse", f"{args.base}^{{commit}}"],
         check=True,
         capture_output=True,
         text=True,
     ).stdout.strip()
-    wt = os.path.join(REPO, ".scratch", f"ab_{sha}")
-    fresh = not os.path.isdir(wt)
-    if fresh:
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "add", "--detach", wt, sha],
-            check=True,
-            capture_output=True,
-        )
-    else:
-        at = subprocess.run(
-            ["git", "-C", wt, "rev-parse", "HEAD"],
-            check=True,
-            capture_output=True,
-            text=True,
-        ).stdout.strip()
-        if at != sha:
-            sys.exit(
-                f"existing worktree {wt} is at {at[:12]}, not {sha[:12]} — "
-                "remove it (git worktree remove) and rerun"
-            )
+    # the base checkout lives outside the repository, so nothing is
+    # registered in it or left behind there
+    wt = tempfile.mkdtemp(prefix=f"ab_{sha[:12]}_")
     try:
+        tar = subprocess.run(
+            ["git", "-C", REPO, "archive", sha], check=True, capture_output=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=tar, check=True)
         # base first, HEAD second, back to back — same machine state
         base_t = _run_side(wt, keys, args.reps, args.sf_dir)
         head_t = _run_side(REPO, keys, args.reps, args.sf_dir)
     finally:
-        if fresh:
-            subprocess.run(
-                ["git", "-C", REPO, "worktree", "remove", "--force", wt],
-                capture_output=True,
-            )
+        shutil.rmtree(wt, ignore_errors=True)
 
     rows = {}
     for k in keys:
