@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources import landsat
-from ..util import persist_tracked
+from ..util import kernel, persist_tracked
 from ..sources.landsat import FIXTURE_DIR
 from .text import _TOKS_SQL
 
@@ -182,7 +182,7 @@ def _wgs84_deg_meters_cols(lat: Column) -> tuple[Column, Column]:
         lon_m, lat_m = wgs84_deg_meters(lat_s.to_numpy())
         return pd.DataFrame({"lon_m": lon_m, "lat_m": lat_m})
 
-    _udf = pandas_udf(_kernel, "lon_m double, lat_m double")
+    _udf = pandas_udf(kernel(_kernel), "lon_m double, lat_m double")
     g = _udf(lat)
     return g.getField("lon_m"), g.getField("lat_m")
 

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources.tables import table
-from ..util import persist_tracked
+from ..util import kernel, persist_tracked, split_guard
 
 # Shared tokenization: lowercase, split on whitespace runs. The oracle
 # uses the byte-identical duckdb form (string_split_regex + 'g' flag
@@ -130,6 +130,7 @@ def _freq_rank_sort_udf(topk: DataFrame):
     fm = {int(r["tok"]): int(r["freq"]) for r in topk.collect()}
 
     @pandas_udf("array<long>")
+    @kernel
     def rank_sort(toks: pd.Series) -> pd.Series:
         import numpy as np
         import pandas as pd_
@@ -202,20 +203,16 @@ def _prefix_filter_pairs(
     Returns (doc_a, doc_b, sz_a, sz_b, inter) — callers apply their
     own jaccard formula, rounding, and semantic threshold.
     """
-    # single-split guard (the _hashed_docs recipe): callers that pass
-    # a freshly-derived frame over a one-file parquet source would
-    # otherwise run the rank kernel, the verify join build and the
-    # tokenize on ONE task; fires only when under-split, a no-op at
-    # real scale where the source is thousands of splits.
+    # util.split_guard: callers that pass a freshly-derived frame over
+    # a one-file parquet source would otherwise run the rank kernel,
+    # the verify join build and the tokenize on ONE task.
     # ensure_split=False callers pass the _hashed_docs frame, which is
     # ALREADY guarded + persisted — re-checking here cost a full
     # analysis/planning pass (DataFrame→RDD conversion) per key and a
     # duplicate persist registration (optimization r16, VERDICT r15
     # item 1 suspect c).
     if ensure_split:
-        sc = docs.sparkSession.sparkContext
-        if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-            docs = docs.repartition(sc.defaultParallelism)
+        docs = split_guard(docs)
         # The tokenized corpus is read 4× below (wordcount, prefix
         # join, and both sides of the verify join-back); materializing
         # it once on the executors (linear in corpus size, stays
@@ -510,9 +507,7 @@ def _asym_containment_candidates(
     # single-split guard — same rationale (and same ensure_split
     # contract) as _prefix_filter_pairs
     if ensure_split:
-        sc = docs.sparkSession.sparkContext
-        if docs.rdd.getNumPartitions() < sc.defaultParallelism:
-            docs = docs.repartition(sc.defaultParallelism)
+        docs = split_guard(docs)
         docs = persist_tracked(docs)
     # Ranking shape (optimization r15, guide §2.4/§4.2): bounded-pull
     # freq dict + per-row Arrow-kernel sort replaces the row_number
@@ -752,12 +747,8 @@ def _hashed_docs(spark: SparkSession, sf: str) -> DataFrame:
     whole corpus for nothing; now the exchange exists only at test
     scale, where it is the fix, and the production path is genuinely
     zero-shuffle until the band join)."""
-    src = table(spark, sf, "documents")
-    par = spark.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
     return persist_tracked(
-        src
+        split_guard(table(spark, sf, "documents"))
         .select(
             "doc_id",
             "source",
@@ -797,6 +788,7 @@ def _minhash_sig(docs: DataFrame) -> DataFrame:
     b_np = np.array(_MH_B, dtype=np.int64)
 
     @pandas_udf("array<long>")
+    @kernel
     def sig256(th: pd.Series) -> pd.Series:
         out = []
         for arr in th:
@@ -846,6 +838,7 @@ def _minhash_bands(docs: DataFrame) -> DataFrame:
     b_np = np.array(_MH_B, dtype=np.int64)
 
     @pandas_udf("array<long>")
+    @kernel
     def bands64(th: pd.Series) -> pd.Series:
         out = []
         for arr in th:
@@ -1710,7 +1703,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return _sides(*_block_grid(emb)).groupBy("bq", "bc").applyInPandas(
-        block, schema="vec_a bigint, vec_b bigint, cosine double"
+        kernel(block), schema="vec_a bigint, vec_b bigint, cosine double"
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources.tables import table
-from ..util import persist_tracked
+from ..util import kernel, persist_tracked
 
 
 def events_tumbling(spark: SparkSession, sf: str) -> DataFrame:
@@ -3915,7 +3915,7 @@ def ts_forecast_holt_winters(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return daily.groupBy("event_type").applyInPandas(
-        fit,
+        kernel(fit),
         schema=(
             "event_type string, n_scored bigint, hw_mae double, "
             "naive_mae double, mae_ratio double, beats_naive boolean"

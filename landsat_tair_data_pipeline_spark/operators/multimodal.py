@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources.tables import table
+from ..util import kernel
 
 HIST_BINS = 16
 
@@ -99,7 +100,7 @@ def mm_decode_stats(spark: SparkSession, sf: str) -> DataFrame:
             )
 
     return media.mapInPandas(
-        decode,
+        kernel(decode),
         schema="doc_id bigint, media_type string, n_bytes bigint,"
         " first_byte int, byte_sum bigint",
     )
@@ -157,7 +158,7 @@ def mm_resize_plan(spark: SparkSession, sf: str) -> DataFrame:
             )
 
     return media.select("doc_id", "width", "height").mapInPandas(
-        resize,
+        kernel(resize),
         schema="doc_id bigint, out_width int, out_height int, n_out_bytes bigint",
     )
 
@@ -242,7 +243,7 @@ def mm_feature_vectors(spark: SparkSession, sf: str) -> DataFrame:
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
 
     return media.mapInPandas(
-        extract, schema="doc_id bigint, features array<double>"
+        kernel(extract), schema="doc_id bigint, features array<double>"
     )
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources.tables import table
+from ..util import kernel, persist_tracked, split_guard
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -356,7 +357,6 @@ def _house_ivf_topk(
     and k (sim_ivf_topk's body; sim_eval_mrr_ndcg reuses it at the
     wide 50-query/k=10 eval setting). See sim_ivf_topk for semantics
     and the scale argument."""
-    from ..util import persist_tracked
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     ranked = persist_tracked(_ivf_graph_ranked(spark, sf))
@@ -623,7 +623,6 @@ def sim_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     the recall-floor boolean the oracle pins TRUE. The recall VALUE
     stays out of the surface — MLlib cell assignments are
     engine-specific."""
-    from ..util import persist_tracked
 
     # persist: `exact` feeds BOTH the semi-join and its own count —
     # without it the 50-query brute-force scan + window rank can run
@@ -702,8 +701,6 @@ def emb_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     same cross-order tolerance the DuckDB twin already certifies."""
     import numpy as np
 
-    from ..util import persist_tracked
-
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     n_dims = len(emb.select("v").first()[0])
     ex0 = emb.select("vec_id", F.posexplode("v").alias("d0", "x")).select(
@@ -729,7 +726,7 @@ def emb_pca_power(spark: SparkSession, sf: str) -> DataFrame:
                 )
 
         w_rows = (
-            emb.mapInPandas(part_w, schema="d int, w double")
+            emb.mapInPandas(kernel(part_w), schema="d int, w double")
             .groupBy("d")
             .agg(F.sum("w").alias("w"))
             .collect()
@@ -932,8 +929,6 @@ def emb_kmeans_converged(spark: SparkSession, sf: str) -> DataFrame:
     tolerance the Spark-vs-DuckDB twin already relies on."""
     import numpy as np
 
-    from ..util import persist_tracked
-
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     first = emb.select("v").first()
     n_dims = len(first[0])
@@ -984,7 +979,7 @@ def emb_kmeans_converged(spark: SparkSession, sf: str) -> DataFrame:
 
         rows = (
             emb.mapInPandas(
-                part_stats,
+                kernel(part_stats),
                 schema="cid long, d int, s double, cnt long, sdist double",
             )
             .groupBy("cid", "d")
@@ -1128,8 +1123,8 @@ def _pq_best(emb: DataFrame, C) -> DataFrame:
                 }
             )
 
-    assigned = emb.select("vec_id", "v").mapInPandas(
-        assign, schema="vec_id long, sub int, dist double, code int"
+    assigned = split_guard(emb.select("vec_id", "v")).mapInPandas(
+        kernel(assign), schema="vec_id long, sub int, dist double, code int"
     )
     return assigned.select(
         "vec_id", "sub", F.struct("dist", "code").alias("b")
@@ -1321,9 +1316,8 @@ def _pq_search_ranked(
     cross-engine tolerance."""
     import numpy as np
 
-    from ..util import persist_tracked
-
-    emb = persist_tracked(_emb(spark, sf))
+    # spread once here: both ranking kernels below scan this frame
+    emb = persist_tracked(split_guard(_emb(spark, sf)))
     probes = (
         emb.where(F.col("vec_id") < _ADC_NQ).select("vec_id", "v").collect()
     )
@@ -1345,7 +1339,7 @@ def _pq_search_ranked(
             yield _pq_partial_topk_pdf(_sq_dists(X, Q), vids, qids, _ADC_K)
 
     exd = emb.select("vec_id", "v").mapInPandas(
-        exact_partials, schema="query_id long, vec_id long, dist double"
+        kernel(exact_partials), schema="query_id long, vec_id long, dist double"
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("dist"), F.asc("vec_id"))
     exk = persist_tracked(
@@ -1377,7 +1371,7 @@ def _pq_search_ranked(
             )
 
     adcd = emb.select("vec_id", "v").mapInPandas(
-        adc_partials, schema="query_id long, vec_id long, adist double"
+        kernel(adc_partials), schema="query_id long, vec_id long, adist double"
     )
     wa = Window.partitionBy("query_id").orderBy(
         F.asc("adist"), F.asc("vec_id")
@@ -1920,7 +1914,7 @@ def _ranked_cells(emb: DataFrame, seed_src: DataFrame) -> DataFrame:
                 )
 
     return emb.select("vec_id", "v").mapInPandas(
-        rank_cells, schema="vec_id long, cid long, rk int"
+        kernel(rank_cells), schema="vec_id long, cid long, rk int"
     )
 
 
@@ -2004,7 +1998,7 @@ def _cell_join(
     its members in the global top-k, so the merge is exact. Returns
     (vec_id, nn_id, cosine, rank)."""
     local = _sides(queries, members).groupBy(*keys).applyInPandas(
-        _cell_block_topk(k),
+        kernel(_cell_block_topk(k)),
         schema="vec_id bigint, nn_id bigint, cosine double",
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("nn_id"))
@@ -2050,7 +2044,6 @@ def sim_knn_graph_ivf(spark: SparkSession, sf: str) -> DataFrame:
     cell with no second-probe candidates emit < k rows identically.
     Measured recall vs the exact graph: see sim_knn_graph_ivf_recall
     (pinned with ~3× margin)."""
-    from ..util import persist_tracked
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     ranked = persist_tracked(_ivf_graph_ranked(spark, sf))
@@ -2199,7 +2192,6 @@ def sim_eval_mrr_ndcg(spark: SparkSession, sf: str) -> DataFrame:
     of the exact top-10 is what 2-probe IVF misses on a random
     corpus) — both verdict classes non-vacuous, values pinned
     exactly."""
-    from ..util import persist_tracked
 
     exact = persist_tracked(
         _exact_topk(spark, sf, n_queries=_RECALL_QUERIES, k=_EVAL_K).select(
@@ -2350,7 +2342,6 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     vec_ids); a singleton cell emits nothing in either engine; the
     kernel was cross-checked row-identical against the original
     JVM pair-join form at all three sfs before the swap."""
-    from ..util import persist_tracked
 
     emb = _emb(spark, sf).select("vec_id", "v")
     cells = _ivf_graph_ranked(spark, sf).where(F.col("rk") == 1).select(
@@ -2396,7 +2387,7 @@ def dedup_semdedup(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     return m.groupBy("cell").applyInPandas(
-        block,
+        kernel(block),
         schema="vec_id bigint, cell bigint, witness_id bigint, cosine double",
     )
 
@@ -2446,7 +2437,6 @@ def sim_knn_graph_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: exact side is a broadcast-query brute-force scan —
     linear in corpus × 50 queries, the sampled-ground-truth protocol
     the exact sim_knn_graph docstring prescribes at 10⁹ vectors."""
-    from ..util import persist_tracked
 
     # persist: `exact` feeds BOTH the semi-join and its own count
     exact = persist_tracked(
@@ -2531,7 +2521,6 @@ def sim_ann_cross_join(spark: SparkSession, sf: str) -> DataFrame:
     no candidates in either engine; output non-vacuous at every sf
     (each odd query meets ≥ 1 even member through its probes on this
     data — verified 750/750/3000 rows at sf0.001/0.01/0.1)."""
-    from ..util import persist_tracked
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     idx_side = emb.where(F.col("vec_id") % 2 == 0)
@@ -2598,7 +2587,6 @@ def sim_ann_cross_recall(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: exact side is a broadcast-query brute-force scan over
     the index side — linear in n_A × 200; the approximate side is the
     production operator filtered to the probe set."""
-    from ..util import persist_tracked
 
     emb = _emb(spark, sf).select("vec_id", "v")
     q = emb.where(
@@ -2779,7 +2767,6 @@ def emb_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     assignment, and NOTHING corpus-sized broadcasts. At 10⁹-corpus ×
     10⁶-shard this is the faiss-style probe-the-standing-index
     recipe, the semantic twin of the fingerprint ledger probe."""
-    from ..util import persist_tracked
 
     emb = persist_tracked(_emb(spark, sf).select("vec_id", "v"))
     shard_pred = F.col("vec_id") % _INCR_SEM_SHARD_MOD == (

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources.tables import table
-from ..util import persist_tracked
+from ..util import kernel, persist_tracked
 
 def TOKENS(col: str = "text"):
     # lazy: classic PySpark needs an active session for Column exprs
@@ -1006,7 +1006,7 @@ def text_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
         .select("text")
     )
     toks = txt.select(F.explode(TOKENS()).alias("tok"))
-    cands = toks.mapInPandas(_mg_partition, "tok string").distinct()
+    cands = toks.mapInPandas(kernel(_mg_partition), "tok string").distinct()
     total = txt.agg(F.sum(F.size(TOKENS())).alias("n"))
     return (
         toks.join(F.broadcast(cands), "tok")

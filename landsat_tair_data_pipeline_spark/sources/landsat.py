@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
+from ..util import kernel
+
 # Env-overridable so the gated full-cardinality validation
 # (tools/fullcard_check.py) can point the whole engine — including the
 # oracle SQL strings that format this path in at import time — at a
@@ -261,4 +263,4 @@ def ingest_pt_tensors(
                     )
             yield pd.DataFrame(rows, columns=["scene_id", "station_pos", "bands"])
 
-    return files.mapInPandas(decode, schema=out_schema)
+    return files.mapInPandas(kernel(decode), schema=out_schema)

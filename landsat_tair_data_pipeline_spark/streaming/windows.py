@@ -35,6 +35,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from ..operators.events import _SCD2_SQL as _BATCH_SCD2_SQL
 from ..registry import QuerySpec
 from ..sources.tables import _normalize_event_ts, ensure_nanos_readable, table
+from ..util import kernel
 
 
 # Test seam: extra file-source reader options injected into
@@ -335,7 +336,7 @@ def stream_stateful_user_totals(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     sdf = ev.groupBy("user_id").applyInPandasWithState(
-        totals, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        kernel(totals), out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
 
     from pyspark.sql import Window
@@ -471,7 +472,7 @@ def stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
         yield pdf
 
     sdf = ev.groupBy("user_id").applyInPandasWithState(
-        scd2, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        kernel(scd2), out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
     out = run_to_memory(
         sdf, "stream_scd2_sink", "update", max_input_batches=1
@@ -764,6 +765,12 @@ def stream_dedup_shard(spark: SparkSession, sf: str) -> DataFrame:
         matched = ledger.join(SF_.broadcast(bfp), "h", "left_semi")
         vs_corpus = rows.join(SF_.broadcast(matched), "h", "left_semi")
         fresh = rows.join(SF_.broadcast(matched), "h", "left_anti")
+        # Re-reading the out sink as the seen set is correct only
+        # because foreachBatch runs micro-batches one after another:
+        # batch N's append has finished before batch N+1 reads the
+        # sink (read-after-write). It also assumes no other writer
+        # touches out_dir while the query runs; a concurrent writer's
+        # rows would count as seen here.
         if os.path.isdir(out_dir) and any(
             f.endswith(".parquet") for f in os.listdir(out_dir)
         ):

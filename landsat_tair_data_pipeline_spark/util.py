@@ -14,8 +14,11 @@ this.)
 from __future__ import annotations
 
 import hashlib
+import inspect
 import os
 import shutil
+
+from . import zipcache  # noqa: F401  (installs the worker hook; see kernel)
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCRATCH_DIR = os.path.join(REPO_ROOT, ".scratch")
@@ -60,6 +63,47 @@ def persist_tracked(df, level=None):
 
     df = df.persist(level or StorageLevel.MEMORY_AND_DISK)
     _TRACKED.setdefault(_CACHE_SCOPE[0], []).append(df)
+    return df
+
+
+class kernel:
+    """A Python kernel as handed to ``mapInPandas``, ``applyInPandas``,
+    ``applyInPandasWithState`` or ``pandas_udf``: calls ``fn`` unchanged.
+
+    Every engine kernel goes through this class. It is pickled by
+    reference, so unpickling a kernel on a worker imports this module
+    and with it ``zipcache``, which stops the worker from re-reading
+    ``pyspark.zip`` before each task. A bare nested function would be
+    pickled by value and import nothing from the package (see
+    ``zipcache``).
+
+    PySpark reads ``fn``'s argument list through
+    ``inspect.getfullargspec`` (to decide whether a grouped kernel gets
+    the key), its type hints (to infer a ``pandas_udf``'s kind) and its
+    name (shown in the plan). ``getfullargspec`` ignores ``__wrapped__``
+    but honours ``__signature__``, so all three are forwarded."""
+
+    def __init__(self, fn):
+        self.__wrapped__ = fn
+
+    def __call__(self, *args):
+        return self.__wrapped__(*args)
+
+    __signature__ = property(lambda self: inspect.signature(self.__wrapped__))
+    __annotations__ = property(lambda self: self.__wrapped__.__annotations__)
+    __name__ = property(lambda self: self.__wrapped__.__name__)
+
+
+def split_guard(df):
+    """``df`` spread over ``defaultParallelism`` splits when it has fewer.
+
+    A one-file parquet source otherwise runs a narrow pipeline, Python
+    kernels included, on ONE task. The repartition fires only when the
+    frame is under-split, so at real scale (thousands of splits) the
+    plan has no extra exchange."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
     return df
 
 

@@ -812,7 +812,8 @@ def test_pq_codes_is_dim_stream_broadcast_assignment(spark):
     ONE Arrow mapInPandas kernel over the raw vectors against the
     driver-held 16×d codebook block — no dim-stream fan-out join, no
     per-(vec, sub, code) aggregate exchange, no argmin window; the
-    only shuffle left is the 4-rows-per-vector subspace aggregate."""
+    only shuffle left is the 4-rows-per-vector subspace aggregate,
+    besides util.split_guard's spread of the one-file source."""
     plan = _plan(spark, "emb_pq_codes")
     assert "MapInPandas" in plan, "PQ assignment kernel missing"
     assert "Window" not in plan
@@ -820,8 +821,11 @@ def test_pq_codes_is_dim_stream_broadcast_assignment(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # nothing cached in this plan, so text count = node count: the
-    # subspace aggregate's partial/final exchange pair only
-    assert _shuffles(plan) <= 2, _shuffles(plan)
+    # split guard's round-robin exchange (SF is one file, one split)
+    # and the subspace aggregate's partial/final exchange pair only
+    spread = plan.count("RoundRobinPartitioning")
+    assert spread == 1, spread
+    assert _shuffles(plan) - spread <= 2, _shuffles(plan)
 
 
 def test_edit_distance_lev_stays_out_of_join_condition(spark):

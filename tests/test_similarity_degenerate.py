@@ -93,3 +93,40 @@ def test_ranked_cells_keys_with_no_embeddings_match_oracle(
 ):
     spec = all_queries()[name]
     compare(spark, no_embeddings_dir, spec.fn, spec.oracle)
+
+
+def _kernel_tasks(df) -> list[int]:
+    """Tasks of each stage that runs a MapInPandas kernel in ``df``'s
+    executed plan, cached subplans included: the partition count of
+    the kernel's RDD, since the kernel is a narrow map."""
+    df.collect()
+    found = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "MapInPandas":
+            found.append(node.execute().getNumPartitions())
+        if name == "AdaptiveSparkPlan":
+            walk(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            walk(node.plan())
+        elif name == "InMemoryTableScan":
+            walk(node.relation().cachedPlan())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def test_pq_kernels_spread_a_single_file_source(spark, sf_dir):
+    """A one-file embeddings table is one split; each PQ kernel must
+    still run on more than one task (util.split_guard)."""
+    emb = S._emb(spark, sf_dir)
+    assert emb.rdd.getNumPartitions() == 1
+    exk, adck = S._pq_search_ranked(spark, sf_dir)
+    best = S._pq_best(emb, S._pq_codebook_block(emb))
+    for df in (exk, adck, best):
+        tasks = _kernel_tasks(df)
+        assert tasks and min(tasks) > 1, tasks
