@@ -23,9 +23,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.landsat import _scene_date_parts
+from .radiometry import k_constant
+
 # 0-based band indexes selected for Landsat 8/9 (config.py:19)
 L8_BAND_TAKE = [1, 2, 3, 4, 5, 9, 6]
 FEATURE_LEN = 365
+
+
+def _l8_remap(bands: Column) -> Column:
+    """The 7 Landsat 8/9 bands the features keep, in feature order."""
+    return F.array(*[bands[i] for i in L8_BAND_TAKE])
+
+
+def _image343(bands: Column) -> Column:
+    """The flat 343-value image of a (bands × 7 × 7) patch: Landsat 5
+    bands as they are, Landsat 8/9 through ``_l8_remap``, band-major.
+    Reads ``is_landsat_5``."""
+    remapped = F.when(F.col("is_landsat_5") == 1, bands).otherwise(_l8_remap(bands))
+    return F.flatten(F.flatten(remapped))
 
 
 def _coeffs14(is_l5: Column) -> Column:
@@ -50,31 +66,19 @@ def _coeffs14(is_l5: Column) -> Column:
 def _k2_k1() -> Column:
     """[K2, K1] — K2 first (feature_extractor.py:82-95), BAND_10
     probed before BAND_6 regardless of sensor."""
-    from .radiometry import k_constant
-
     return F.array(k_constant("thermal", "K2"), k_constant("thermal", "K1"))
 
 
-def assemble_features(df: DataFrame, bt_col: str = "bt_bands") -> DataFrame:
+def assemble_features(df: DataFrame) -> DataFrame:
     """Add the 365-wide `features` array<double> column.
 
-    Requires columns: bt_col (nested double bands), is_landsat_5,
+    Requires columns: bt_bands (nested double bands), is_landsat_5,
     rescaling, thermal, longitude, latitude, and scene_id (for date
     parts, feature_extractor.py:106-109).
     """
-    bands = F.col(bt_col)
-    remapped = F.when(
-        F.col("is_landsat_5") == 1, bands
-    ).otherwise(F.array(*[bands[i] for i in L8_BAND_TAKE]))
-    img343 = F.flatten(F.flatten(remapped))
-
-    date_tok = F.split(F.col("scene_id"), "_")[3]
-    year = F.substring(date_tok, 1, 4).cast("double")
-    month = F.substring(date_tok, 5, 2).cast("double")
-    day = F.substring(date_tok, 7, 2).cast("double")
-
+    year, month, day = (p.cast("double") for p in _scene_date_parts())
     features = F.concat(
-        img343,
+        _image343(F.col("bt_bands")),
         _coeffs14(F.col("is_landsat_5")),
         _k2_k1(),
         F.array(F.col("is_landsat_5").cast("double")),

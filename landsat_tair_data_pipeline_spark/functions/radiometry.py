@@ -109,16 +109,43 @@ def filter_valid_scenes(df: DataFrame) -> DataFrame:
     )
 
 
+def _is_landsat_5(n_bands: Column) -> Column:
+    """1 for a 7-band (Landsat 5) patch or scene, else 0."""
+    return F.when(n_bands == 7, 1).otherwise(0)
+
+
 def with_sensor_flag(df: DataFrame) -> DataFrame:
     """is_landsat_5 from band count (SURVEY §2.2 proj_sensor_flag)."""
-    return df.withColumn(
-        "is_landsat_5", F.when(F.size("bands") == 7, 1).otherwise(0)
+    return df.withColumn("is_landsat_5", _is_landsat_5(F.size("bands")))
+
+
+def _rescaling(band: Column) -> tuple[Column, Column]:
+    """(ML, AL) radiance rescaling coefficients of a 1-based band."""
+    return (
+        coeff("rescaling", "RADIANCE_MULT_BAND_", band),
+        coeff("rescaling", "RADIANCE_ADD_BAND_", band),
     )
 
 
-def to_brightness_temperature(df: DataFrame, out: str = "bt_bands") -> DataFrame:
-    """bands(int DN) + rescaling/thermal maps → nested double array
-    with radiance everywhere and BT in the thermal band.
+def _radiance(dn: Column, ml: Column, al: Column) -> Column:
+    """L = ML·DN + AL (data_processor.py:95-99)."""
+    return dn.cast("double") * ml + al
+
+
+def _per_pixel(grid: Column, fn) -> Column:
+    """``fn`` applied to every pixel of one band's 2-D grid."""
+    return F.transform(grid, lambda row: F.transform(row, fn))
+
+
+def _radiance_grid(grid: Column, i: Column) -> Column:
+    """One band's DN grid (0-based band index ``i``) → radiance grid."""
+    ml, al = _rescaling(i + 1)
+    return _per_pixel(grid, lambda px: _radiance(px, ml, al))
+
+
+def to_brightness_temperature(df: DataFrame) -> DataFrame:
+    """bands(int DN) + rescaling/thermal maps → ``bt_bands``, a nested
+    double array with radiance everywhere and BT in the thermal band.
 
     One transform pass with index-aware lambdas; the per-band ML/AL
     map lookups are loop-invariant so Catalyst evaluates them once per
@@ -129,25 +156,15 @@ def to_brightness_temperature(df: DataFrame, out: str = "bt_bands") -> DataFrame
     k2 = k_constant("thermal", "K2")
 
     def band_expr(grid: Column, i: Column) -> Column:
-        ml = coeff("rescaling", "RADIANCE_MULT_BAND_", i + 1)
-        al = coeff("rescaling", "RADIANCE_ADD_BAND_", i + 1)
-        radiance = lambda px: px.cast("double") * ml + al  # noqa: E731
-        bt_l5 = lambda px: brightness_temperatures(  # noqa: E731
-            radiance(px), k1, k2
-        )[0]
-        bt_l89 = lambda px: brightness_temperatures(  # noqa: E731
-            radiance(px), k1, k2
-        )[1]
+        ml, al = _rescaling(i + 1)
+
+        def bt(px: Column) -> tuple[Column, Column]:
+            return brightness_temperatures(_radiance(px, ml, al), k1, k2)
+
         return F.when(
             i == thermal_idx,
-            F.when(
-                F.size("bands") == 7,
-                F.transform(grid, lambda row: F.transform(row, bt_l5)),
-            ).otherwise(
-                F.transform(grid, lambda row: F.transform(row, bt_l89))
-            ),
-        ).otherwise(
-            F.transform(grid, lambda row: F.transform(row, radiance))
-        )
+            F.when(F.size("bands") == 7, _per_pixel(grid, lambda px: bt(px)[0]))
+            .otherwise(_per_pixel(grid, lambda px: bt(px)[1])),
+        ).otherwise(_radiance_grid(grid, i))
 
-    return df.withColumn(out, F.transform(F.col("bands"), band_expr))
+    return df.withColumn("bt_bands", F.transform(F.col("bands"), band_expr))

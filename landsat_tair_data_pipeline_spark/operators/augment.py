@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources import landsat
-from ..util import kernel, persist_tracked
-from ..sources.landsat import FIXTURE_DIR
+from ..util import global_prefix, kernel, persist_tracked
+from ..sources.landsat import FIXTURE_DIR, PROBE_SQL
 from .text import _TOKS_SQL
 
 # The assembled feature frame is shared with the domain suite:
@@ -45,9 +45,8 @@ from .domain import (
     _META,
     _RADPX,
     _SCENE_DATES,
-    _gt_first_match,
+    _pixels_long,
     _scene_dates,
-    _valid_scene_base,
     features_with_gt,
 )
 
@@ -91,12 +90,7 @@ def rot_bands(bands: Column, k: int) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def exact_split(
-    df: DataFrame,
-    seed: int = 42,
-    train_ratio: float = 0.8,
-    num_ranges: int | None = None,
-) -> DataFrame:
+def exact_split(df: DataFrame, seed: int = 42, train_ratio: float = 0.8) -> DataFrame:
     """Add a `split` column with EXACT floor(n*ratio) train rows.
 
     Distributed contiguous ranking: range-partition on rand(seed),
@@ -105,9 +99,8 @@ def exact_split(
     The reference's shuffle+slice (feature_extractor.py:146-169) has
     the same semantics: random permutation, exact prefix = train.
 
-    ``num_ranges`` defaults to the cluster's parallelism; the global
-    rank (and hence the split assignment) orders rows by the seeded
-    key alone, so the result is partition-count-independent.
+    The global rank (and hence the split assignment) orders rows by
+    the seeded key alone, so the result is partition-count-independent.
 
     The permutation key is xxhash64(row, seed), NOT rand(seed):
     rand is per-partition-seeded and marked nondeterministic, so the
@@ -123,12 +116,10 @@ def exact_split(
     util.global_prefix, shared with dedup._chunk_summary and
     dedup._global_rank; see its docstring for the full mechanics.
     """
-    from ..util import global_prefix
-
     keyed = df.withColumn(
         "_r", F.xxhash64(*[F.col(c) for c in df.columns], F.lit(seed))
     )
-    indexed = global_prefix(keyed, ["_r"], num_ranges=num_ranges).withColumn(
+    indexed = global_prefix(keyed, ["_r"]).withColumn(
         "_gidx", F.col("_prefix") - 1
     )
     labeled = indexed.withColumn(
@@ -223,22 +214,8 @@ def aug_rot90(spark: SparkSession, sf: str) -> DataFrame:
     ((y,x) → (6-x, y)). Any index slip disagrees on every pixel of the
     probe scenes."""
     patches = landsat.scene_patches(spark).where(landsat.probe_scene())
-    rotated = patches.select(
-        "scene_id",
-        "station_id",
-        F.posexplode(rot_bands(F.col("bands"), 1)).alias("band0", "grid"),
-    )
-    return (
-        rotated.select(
-            "scene_id",
-            "station_id",
-            (F.col("band0") + 1).alias("band"),
-            F.posexplode("grid").alias("y", "row"),
-        )
-        .select(
-            "scene_id", "station_id", "band", "y",
-            F.posexplode("row").alias("x", "value"),
-        )
+    return _pixels_long(
+        patches, ["scene_id", "station_id"], rot_bands(F.col("bands"), 1), "value"
     )
 
 
@@ -246,8 +223,8 @@ _ROT90_SQL = """
 SELECT scene_id, station_id, band,
        (6 - x) AS y, y AS x, dn AS value
 FROM '{fix}/scene_pixels.parquet'
-WHERE substring(split_part(scene_id, '_', 4), 7, 2) = '03'
-""".format(fix=FIXTURE_DIR)
+WHERE {probe}
+""".format(fix=FIXTURE_DIR, probe=PROBE_SQL)
 
 
 def aug_explode_4x(spark: SparkSession, sf: str) -> DataFrame:
@@ -1154,7 +1131,6 @@ def sample_shuffle_deterministic(spark: SparkSession, sf: str) -> DataFrame:
     between Spark and DuckDB (established md5-on-string parity);
     no floats anywhere."""
     from ..sources.tables import table as _table
-    from ..util import global_prefix
 
     docs = _table(spark, sf, "documents").select("doc_id", "source")
     keyed = docs.select(

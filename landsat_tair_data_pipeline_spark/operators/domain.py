@@ -3,16 +3,31 @@
 radiometric conversion, and 365-feature assembly — each oracle-checked
 against DuckDB reading the same fixture files.
 
-Pipeline shape (main.py:24-134 re-expressed, SURVEY §3.1):
+Pipeline shape (main.py:24-134 re-expressed, SURVEY §3.1), each step
+with the queries that check it and, after the semicolon, the one
+helper that computes it:
 
     patches ⋈ metadata ⋈ station-lists        (join_scene_assets)
       → filter valid scenes                    (filt_band_cardinality,
-                                                filt_metadata_keys)
+                                                filt_metadata_keys;
+                                                _valid_patches,
+                                                _scene_band_counts)
+      → sensor flag                            (proj_sensor_flag;
+                                                radiometry._is_landsat_5)
       → DN → radiance → BT                     (map_dn_to_radiance,
-                                                map_bt_l5/map_bt_l89)
-      ⋈ ground truths (first-match, sentinel)  (join_gt_lookup)
+                                                map_bt_l5/map_bt_l89;
+                                                radiometry._radiance,
+                                                to_brightness_temperature)
+      ⋈ ground truths (first-match, sentinel)  (join_gt_lookup;
+                                                _scene_dates,
+                                                _gt_first_match)
       ⋈ stations dim (broadcast, inner)        (join_station_dim)
-      → 365-feature vectors                    (map_concat_features)
+      → 365-feature vectors                    (map_concat_features;
+                                                features.assemble_features,
+                                                features._image343)
+
+Pixel-long outputs go through `_pixels_long`, and only
+`landsat._scene_date_parts` reads the scene-id date token.
 
 The reference's O(scenes × stations × |GT|) nested-loop probe
 (data_loader.py:62-70) becomes one hash join; the per-row pandas
@@ -29,13 +44,20 @@ from pyspark.storagelevel import StorageLevel
 
 from ..functions.features import assemble_features
 from ..functions.radiometry import (
+    _is_landsat_5,
+    _radiance,
+    _rescaling,
+    brightness_temperatures,
     filter_valid_scenes,
+    k_constant,
+    thermal_band_index,
     to_brightness_temperature,
     with_sensor_flag,
 )
 from ..registry import QuerySpec
 from ..sources import landsat
-from ..sources.landsat import FIXTURE_DIR
+from ..sources.landsat import FIXTURE_DIR, _scene_date_parts
+from ..util import split_guard
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB reads the same fixture files directly)
@@ -130,14 +152,8 @@ scene_dates AS (
 
 def _scene_dates(df: DataFrame) -> DataFrame:
     """proj_scene_date_parse (data_loader.py:56-59): YYYYMMDD token[3]."""
-    tok = F.split(F.col("scene_id"), "_")[3]
-    return df.withColumns(
-        {
-            "yr": F.substring(tok, 1, 4).cast("int"),
-            "mo": F.substring(tok, 5, 2).cast("int"),
-            "dy": F.substring(tok, 7, 2).cast("int"),
-        }
-    )
+    yr, mo, dy = (p.cast("int") for p in _scene_date_parts())
+    return df.withColumns({"yr": yr, "mo": mo, "dy": dy})
 
 
 def _gt_first_match(spark: SparkSession) -> DataFrame:
@@ -158,23 +174,45 @@ def _gt_first_match(spark: SparkSession) -> DataFrame:
     )
 
 
-def _valid_scene_base(spark: SparkSession) -> DataFrame:
-    """patches ⋈ metadata, reference drop semantics applied.
-
-    The patches fixture is a single small parquet file → one input
-    split; since the metadata join is broadcast, EVERYTHING downstream
-    (BT conversion, feature assembly) would fuse into that one scan
-    task and run on a single core (measured 12-17s serial for the
-    feature queries vs ~1s spread). The explicit repartition is
-    bench-scale insurance only — a real corpus spans many splits and
-    this shuffle of a few MB is noise; AQE never coalesces an explicit
-    numPartitions."""
-    patches = landsat.scene_patches(spark).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    meta = landsat.scene_metadata(spark)
+def _valid_patches(patches: DataFrame) -> DataFrame:
+    """patches ⋈ metadata (broadcast), the reference's drop semantics
+    applied, with the ``is_landsat_5`` sensor flag."""
+    meta = landsat.scene_metadata(patches.sparkSession)
     return with_sensor_flag(
         filter_valid_scenes(patches.join(F.broadcast(meta), "scene_id"))
+    )
+
+
+def _valid_scene_base(spark: SparkSession) -> DataFrame:
+    """Every valid patch, spread over the cores. The metadata join is
+    broadcast, so BT conversion and feature assembly fuse into the
+    patch scan's tasks; a one-file patch table would run them on one
+    core (measured 12-17s serial vs ~1s spread), hence
+    util.split_guard on the scan."""
+    return _valid_patches(split_guard(landsat.scene_patches(spark)))
+
+
+def _scene_band_counts(spark: SparkSession) -> DataFrame:
+    """(scene_id, n_bands): the band count of each scene's widest patch."""
+    return (
+        landsat.scene_patches(spark)
+        .groupBy("scene_id")
+        .agg(F.max(F.size("bands")).alias("n_bands"))
+    )
+
+
+def _pixels_long(df: DataFrame, keys: list[str], bands, value: str) -> DataFrame:
+    """Nested (bands × rows × cols) ``bands`` (a column name or Column)
+    → one row per pixel: ``keys``, band (1-based), y, x, and the pixel
+    as ``value``."""
+    return (
+        df.select(*keys, F.posexplode(bands).alias("band0", "grid"))
+        .select(
+            *keys,
+            (F.col("band0") + 1).alias("band"),
+            F.posexplode("grid").alias("y", "row"),
+        )
+        .select(*keys, "band", "y", F.posexplode("row").alias("x", value))
     )
 
 
@@ -207,8 +245,6 @@ _SRC_STXT_SQL = (
 
 def src_json_metadata(spark: SparkSession, sf: str) -> DataFrame:
     meta = landsat.scene_metadata(spark)
-    from ..functions.radiometry import k_constant
-
     return meta.select(
         "scene_id",
         F.size("rescaling").alias("n_rescaling_keys"),
@@ -325,35 +361,11 @@ def map_bt_pixels(spark: SparkSession, sf: str) -> DataFrame:
     base = to_brightness_temperature(
         _valid_scene_base(spark).where(landsat.probe_scene())
     )
-    exploded = (
-        base.select(
-            "scene_id",
-            "station_id",
-            F.posexplode("bt_bands").alias("band0", "grid"),
-        )
-        .select(
-            "scene_id",
-            "station_id",
-            (F.col("band0") + 1).alias("band"),
-            F.posexplode("grid").alias("y", "row"),
-        )
-        .select(
-            "scene_id",
-            "station_id",
-            "band",
-            "y",
-            F.posexplode("row").alias("x", "v"),
-        )
-        .select(
-            "scene_id",
-            "station_id",
-            "band",
-            "y",
-            "x",
-            F.round(F.col("v") + 1e-9, 6).alias("value"),
-        )
+    px = _pixels_long(base, ["scene_id", "station_id"], "bt_bands", "v")
+    return px.select(
+        "scene_id", "station_id", "band", "y", "x",
+        F.round(F.col("v") + 1e-9, 6).alias("value"),
     )
-    return exploded
 
 
 _BT_PIXELS_SQL = """
@@ -367,8 +379,8 @@ FROM btpx WHERE {probe}
 # Session-scoped memo for the assembled 365-feature frame — the most
 # expensive shared subplan in the domain suite (driver-side analysis of
 # the 365-element array assembly ~4 s + radiometry/join execution ~5 s),
-# consumed by map_concat_features / domain_pipeline_summary here and the
-# augmentation suite (augment._features_with_gt). SINGLE-slot cache
+# consumed by map_concat_features / domain_pipeline_summary here and
+# augment.aug_explode_4x. SINGLE-slot cache
 # keyed by a session WEAKREF: a WeakKeyDictionary cannot evict here
 # because the cached DataFrame strongly references its own session
 # (dict → value → key keeps every key alive forever). One slot bounds
@@ -536,28 +548,21 @@ def agg_domain_grouped(spark: SparkSession, sf: str) -> DataFrame:
     semantics): plain F.log returns NULL on non-positive radiance,
     silently excluding such pixels from min/max/avg/stddev while n_px
     still counts them."""
-    from ..functions.radiometry import (
-        brightness_temperatures,
-        coeff,
-        k_constant,
-        thermal_band_index,
-    )
-
     base = _scene_dates(_valid_scene_base(spark))
     n_bands = F.size("bands")
     band_1b = thermal_band_index(n_bands, base=1)
     thermal_grid = F.element_at("bands", band_1b)
-    is_l5 = F.when(n_bands == 7, 1).otherwise(0)
+    ml, al = _rescaling(band_1b)
     px = base.select(
-        is_l5.alias("is_landsat_5"),
+        _is_landsat_5(n_bands).alias("is_landsat_5"),
         "yr",
         F.explode(F.flatten(thermal_grid)).alias("dn"),
-        coeff("rescaling", "RADIANCE_MULT_BAND_", band_1b).alias("ml"),
-        coeff("rescaling", "RADIANCE_ADD_BAND_", band_1b).alias("al"),
+        ml.alias("ml"),
+        al.alias("al"),
         k_constant("thermal", "K1").alias("k1"),
         k_constant("thermal", "K2").alias("k2"),
     )
-    rad = F.col("dn").cast("double") * F.col("ml") + F.col("al")
+    rad = _radiance(F.col("dn"), F.col("ml"), F.col("al"))
     bt_l5, bt_l89 = brightness_temperatures(rad, F.col("k1"), F.col("k2"))
     bt = F.when(F.col("is_landsat_5") == 1, bt_l5).otherwise(bt_l89)
     thermal_px = px.select("is_landsat_5", "yr", bt.alias("bt"))
@@ -614,15 +619,10 @@ GROUP BY scene_id
 def proj_sensor_flag(spark: SparkSession, sf: str) -> DataFrame:
     """is_landsat_5 from band count, the sensor discriminator
     (feature_extractor.py:60-71; data_processor.py:15-36)."""
-    patches = landsat.scene_patches(spark)
-    return (
-        patches.groupBy("scene_id")
-        .agg(F.max(F.size("bands")).alias("n_bands"))
-        .select(
-            "scene_id",
-            "n_bands",
-            F.when(F.col("n_bands") == 7, 1).otherwise(0).alias("is_landsat_5"),
-        )
+    return _scene_band_counts(spark).select(
+        "scene_id",
+        "n_bands",
+        _is_landsat_5(F.col("n_bands")).alias("is_landsat_5"),
     )
 
 
@@ -638,15 +638,10 @@ def filt_band_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     """Keep only 7- or 11-band scenes; others logged + dropped
     (data_processor.py:76-82,116-119). Exposes the kept/dropped verdict
     per scene so the malformed fixture scene is visibly rejected."""
-    patches = landsat.scene_patches(spark)
-    return (
-        patches.groupBy("scene_id")
-        .agg(F.max(F.size("bands")).alias("n_bands"))
-        .select(
-            "scene_id",
-            "n_bands",
-            F.col("n_bands").isin(7, 11).cast("int").alias("kept"),
-        )
+    return _scene_band_counts(spark).select(
+        "scene_id",
+        "n_bands",
+        F.col("n_bands").isin(7, 11).cast("int").alias("kept"),
     )
 
 

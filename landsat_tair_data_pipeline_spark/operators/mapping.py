@@ -13,12 +13,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.features import L8_BAND_TAKE
-from ..functions.radiometry import coeff, k_constant
+from ..functions.features import _coeffs14, _image343, _l8_remap
+from ..functions.radiometry import (
+    _radiance_grid,
+    k_constant,
+    to_brightness_temperature,
+)
 from ..registry import QuerySpec
 from ..sources import landsat
 from ..sources.landsat import FIXTURE_DIR
-from .domain import _GT1, _META, _RADPX, _SCENE_DATES, _gt_first_match
+from .augment import VARIANTS, exact_split
+from .domain import (
+    _GT1,
+    _META,
+    _RADPX,
+    _SCENE_DATES,
+    _STXT,
+    _pixels_long,
+    _scene_band_counts,
+    _valid_patches,
+    join_gt_lookup,
+    map_bt_pixels,
+)
 
 # ---------------------------------------------------------------------------
 # §2.1 src_pt_tensor — binary tensor ingest with a full oracle
@@ -36,35 +52,27 @@ def _blob_decoder(content: bytes) -> list:
     return data.transpose(1, 0, 2, 3).tolist()
 
 
+def _pt_pixels(spark: SparkSession, subdir: str, decoder=None) -> DataFrame:
+    """Probe-scene .pt blobs under ``FIXTURE_DIR/subdir`` → pixel-long
+    (scene_id, station_pos, band, y, x, dn) rows. The probe predicate
+    prunes the MANIFEST: excluded blobs are never read, the binary
+    analogue of parquet predicate pushdown."""
+    decoded = landsat.ingest_pt_tensors(
+        spark,
+        f"{FIXTURE_DIR}/{subdir}",
+        decoder=decoder,
+        scene_predicate=landsat.probe_scene(),
+    )
+    return _pixels_long(decoded, ["scene_id", "station_pos"], "bands", "dn")
+
+
 def src_pt_tensor(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed .pt ingest (src_pt_tensor): binaryFile manifest →
     mapInPandas decode → pixel-long rows. The oracle is the pixel
     parquet the blobs were derived from — full value parity for the
     binary path. The torch decoder swaps in via the same injection
-    point when the executor image ships it. Restricted to probe scenes
-    at the MANIFEST level — excluded blobs are never read, the binary
-    analogue of parquet predicate pushdown."""
-    decoded = landsat.ingest_pt_tensors(
-        spark,
-        f"{FIXTURE_DIR}/pt_blobs",
-        decoder=_blob_decoder,
-        scene_predicate=landsat.probe_scene(),
-    )
-    return (
-        decoded.select(
-            "scene_id",
-            "station_pos",
-            F.posexplode("bands").alias("band0", "grid"),
-        )
-        .select(
-            "scene_id", "station_pos", (F.col("band0") + 1).alias("band"),
-            F.posexplode("grid").alias("y", "row"),
-        )
-        .select(
-            "scene_id", "station_pos", "band", "y",
-            F.posexplode("row").alias("x", "dn"),
-        )
-    )
+    point when the executor image ships it."""
+    return _pt_pixels(spark, "pt_blobs", _blob_decoder)
 
 
 def src_pt_real(spark: SparkSession, sf: str) -> DataFrame:
@@ -78,26 +86,7 @@ def src_pt_real(spark: SparkSession, sf: str) -> DataFrame:
     closes the reference's one previously-unexercised operator
     (torch.load + permute, data_loader.py:131-132) with end-to-end
     evidence in a torch-free environment."""
-    decoded = landsat.ingest_pt_tensors(
-        spark,
-        f"{FIXTURE_DIR}/pt_real",
-        scene_predicate=landsat.probe_scene(),
-    )
-    return (
-        decoded.select(
-            "scene_id",
-            "station_pos",
-            F.posexplode("bands").alias("band0", "grid"),
-        )
-        .select(
-            "scene_id", "station_pos", (F.col("band0") + 1).alias("band"),
-            F.posexplode("grid").alias("y", "row"),
-        )
-        .select(
-            "scene_id", "station_pos", "band", "y",
-            F.posexplode("row").alias("x", "dn"),
-        )
-    )
+    return _pt_pixels(spark, "pt_real")
 
 
 _PT_SQL = """
@@ -170,17 +159,7 @@ def join_zip_positional(spark: SparkSession, sf: str) -> DataFrame:
     the arrays are rebuilt per scene (position-sorted) and re-related
     with posexplode(arrays_zip(...)) — the declared Spark form of the
     reference's zip+index idiom."""
-    looked = landsat.station_lists(spark)
-    gt = _gt_first_match(spark)
-    from .domain import _scene_dates
-
-    dated = _scene_dates(looked)
-    with_gt = dated.join(gt, ["yr", "mo", "dy", "station_id"], "left").select(
-        "scene_id",
-        "station_pos",
-        "station_id",
-        F.coalesce("air_temp", F.lit(-9999.0)).alias("air_temp"),
-    )
+    with_gt = join_gt_lookup(spark, sf)
     arrays = with_gt.groupBy("scene_id").agg(
         F.array_sort(
             F.collect_list(F.struct("station_pos", "station_id", "air_temp"))
@@ -209,13 +188,7 @@ FROM stxt s
 JOIN scene_dates d ON s.scene_id = d.scene_id
 LEFT JOIN gt1 g ON d.yr = g.yr AND d.mo = g.mo AND d.dy = g.dy
                AND s.station_id = g.station_id
-"""
-
-from .domain import _STXT  # noqa: E402 — shared CTE text
-
-_ZIP_SQL = _ZIP_SQL.format(
-    stxt=_STXT.strip(), sd=_SCENE_DATES.strip(), gt1=_GT1.strip()
-)
+""".format(stxt=_STXT.strip(), sd=_SCENE_DATES.strip(), gt1=_GT1.strip())
 
 
 # ---------------------------------------------------------------------------
@@ -254,8 +227,6 @@ SELECT
 def agg_ratio(spark: SparkSession, sf: str) -> DataFrame:
     """Split/augmentation ratio algebra (main.py:93,107): exact train
     share and the 4× factor, computed from the real split + explode."""
-    from .augment import VARIANTS, exact_split
-
     docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
     labeled = exact_split(docs, seed=42, train_ratio=0.8)
     train = labeled.where(F.col("split") == "train")
@@ -334,34 +305,9 @@ FROM (SELECT scene_id, content,
 def _radiance_pixels(spark: SparkSession) -> DataFrame:
     """Pixel-long radiance on valid scenes — Spark side computed on the
     NESTED arrays then exploded (layout-independent vs the oracle)."""
-    from ..functions.radiometry import filter_valid_scenes
-
-    patches = landsat.scene_patches(spark).where(landsat.probe_scene())
-    meta = landsat.scene_metadata(spark)
-    base = filter_valid_scenes(patches.join(F.broadcast(meta), "scene_id"))
-
-    def band_expr(grid, i):
-        ml = coeff("rescaling", "RADIANCE_MULT_BAND_", i + 1)
-        al = coeff("rescaling", "RADIANCE_ADD_BAND_", i + 1)
-        return F.transform(
-            grid, lambda row: F.transform(row, lambda px: px.cast("double") * ml + al)
-        )
-
-    rad = base.withColumn("rad_bands", F.transform(F.col("bands"), band_expr))
-    return (
-        rad.select(
-            "scene_id", "station_id",
-            F.posexplode("rad_bands").alias("band0", "grid"),
-        )
-        .select(
-            "scene_id", "station_id", (F.col("band0") + 1).alias("band"),
-            F.posexplode("grid").alias("y", "row"),
-        )
-        .select(
-            "scene_id", "station_id", "band", "y",
-            F.posexplode("row").alias("x", "rad"),
-        )
-    )
+    base = _valid_patches(landsat.scene_patches(spark).where(landsat.probe_scene()))
+    rad = base.withColumn("rad_bands", F.transform(F.col("bands"), _radiance_grid))
+    return _pixels_long(rad, ["scene_id", "station_id"], "rad_bands", "rad")
 
 
 def map_dn_to_radiance(spark: SparkSession, sf: str) -> DataFrame:
@@ -382,20 +328,23 @@ FROM radpx WHERE {probe}
 """.format(meta=_META.strip(), radpx=_RADPX.strip(), probe=landsat.PROBE_SQL)
 
 
+def _thermal_cells(
+    spark: SparkSession, sf: str, band: int, n_bands: int
+) -> DataFrame:
+    """map_bt_pixels restricted to ``band`` of the ``n_bands``-band scenes."""
+    scenes = (
+        _scene_band_counts(spark).where(F.col("n_bands") == n_bands).select("scene_id")
+    )
+    return map_bt_pixels(spark, sf).where(F.col("band") == band).join(
+        scenes, "scene_id"
+    )
+
+
 def map_bt_l5(spark: SparkSession, sf: str) -> DataFrame:
     """L5 thermal band 6: BT = K2 / ln(K1/L + 1)
     (data_processor.py:109-115), isolated to the exact cells it
     touches."""
-    from .domain import map_bt_pixels
-
-    return map_bt_pixels(spark, sf).where(F.col("band") == 6).join(
-        landsat.scene_patches(spark)
-        .groupBy("scene_id")
-        .agg(F.max(F.size("bands")).alias("nb"))
-        .where(F.col("nb") == 7)
-        .select("scene_id"),
-        "scene_id",
-    )
+    return _thermal_cells(spark, sf, 6, 7)
 
 
 _BT_L5_SQL = """
@@ -409,16 +358,7 @@ FROM btpx WHERE n_bands = 7 AND band = 6 AND {probe}
 def map_bt_l89(spark: SparkSession, sf: str) -> DataFrame:
     """L8/9 thermal band 10: BT = K2 / (K1/(L+1)) — the reference's
     non-USGS form, replicated not fixed (data_processor.py:102-108)."""
-    from .domain import map_bt_pixels
-
-    return map_bt_pixels(spark, sf).where(F.col("band") == 10).join(
-        landsat.scene_patches(spark)
-        .groupBy("scene_id")
-        .agg(F.max(F.size("bands")).alias("nb"))
-        .where(F.col("nb") == 11)
-        .select("scene_id"),
-        "scene_id",
-    )
+    return _thermal_cells(spark, sf, 10, 11)
 
 
 _BT_L89_SQL = """
@@ -433,18 +373,11 @@ def map_band_remap_l8(spark: SparkSession, sf: str) -> DataFrame:
     """L8/9 band selection/reorder [2,3,4,5,6,10,7] (config.py:19,
     feature_extractor.py:62-69): checked value-level — output position
     → source band plus the (0,0) pixel of the remapped grid."""
-    from ..functions.radiometry import filter_valid_scenes
-
-    patches = landsat.scene_patches(spark)
-    meta = landsat.scene_metadata(spark).select("scene_id")
-    l8 = filter_valid_scenes(
-        patches.join(F.broadcast(landsat.scene_metadata(spark)), "scene_id")
-    ).where(F.size("bands") == 11)
-    remapped = F.array(*[F.col("bands")[i] for i in L8_BAND_TAKE])
+    l8 = _valid_patches(landsat.scene_patches(spark)).where(F.size("bands") == 11)
     return l8.select(
         "scene_id",
         "station_id",
-        F.posexplode(remapped).alias("out_pos", "grid"),
+        F.posexplode(_l8_remap(F.col("bands"))).alias("out_pos", "grid"),
     ).select(
         "scene_id",
         "station_id",
@@ -470,16 +403,8 @@ def map_coeff_vector(spark: SparkSession, sf: str) -> DataFrame:
     """The 14-coefficient gather: 7×MULT then 7×ADD in mapped-band
     order (feature_extractor.py:64-76), exploded to (scene, pos,
     coeff)."""
-    from ..functions.features import _coeffs14
-    from ..functions.radiometry import filter_valid_scenes, with_sensor_flag
-
     patches = landsat.scene_patches(spark).select("scene_id", "bands")
-    meta = landsat.scene_metadata(spark)
-    base = with_sensor_flag(
-        filter_valid_scenes(
-            patches.join(F.broadcast(meta), "scene_id")
-        )
-    ).dropDuplicates(["scene_id"])
+    base = _valid_patches(patches).dropDuplicates(["scene_id"])
     return base.select(
         "scene_id",
         F.posexplode(_coeffs14(F.col("is_landsat_5"))).alias("pos", "coeff"),
@@ -537,23 +462,9 @@ def map_flatten(spark: SparkSession, sf: str) -> DataFrame:
     the whole flatten tree, so this query evaluates it 3× per row —
     the 10× corpus restriction (both sensor families guaranteed) is
     what keeps that affordable, same policy as map_bt_pixels."""
-    from ..functions.radiometry import (
-        filter_valid_scenes,
-        to_brightness_temperature,
-        with_sensor_flag,
-    )
-
     patches = landsat.scene_patches(spark).where(landsat.probe_scene())
-    meta = landsat.scene_metadata(spark)
-    base = with_sensor_flag(
-        filter_valid_scenes(patches.join(F.broadcast(meta), "scene_id"))
-    )
-    bt = to_brightness_temperature(base)
-    bands = F.col("bt_bands")
-    remapped = F.when(F.col("is_landsat_5") == 1, bands).otherwise(
-        F.array(*[bands[i] for i in L8_BAND_TAKE])
-    )
-    flat = F.flatten(F.flatten(remapped))
+    bt = to_brightness_temperature(_valid_patches(patches))
+    flat = _image343(F.col("bt_bands"))
     probes = [(0, 0, 0, 0), (170, 3, 3, 2), (342, 6, 6, 6)]
     cols = [
         F.round(F.element_at(flat, p + 1) + 1e-9, 6).alias(f"flat_{p}")

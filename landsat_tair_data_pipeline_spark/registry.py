@@ -28,7 +28,6 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB, or None → rows-only check
-    doc: str = ""
 
 
 def _wrap(name: str, fn: Callable[[SparkSession, str], DataFrame]):

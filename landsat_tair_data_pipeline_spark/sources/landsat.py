@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
@@ -53,24 +53,30 @@ FIXTURE_DIR = os.environ.get(
 # parquet scan (PushedFilters), so probe queries also PROCESS ~10×
 # less, not just emit less.
 PROBE_DAY = "03"
+PROBE_SQL = f"substring(split_part(scene_id, '_', 4), 7, 2) = '{PROBE_DAY}'"
 
 
-def probe_scene(col: str = "scene_id"):
+def _scene_date_parts() -> tuple[Column, Column, Column]:
+    """(YYYY, MM, DD) strings of ``scene_id``'s acquisition-date token,
+    its fourth ``_``-separated field (LC08_L1TP_174034_20140103_...):
+    the one Spark-side reading of the scene-id format."""
+    tok = F.split(F.col("scene_id"), "_")[3]
+    return F.substring(tok, 1, 4), F.substring(tok, 5, 2), F.substring(tok, 7, 2)
+
+
+def probe_scene() -> Column:
     """Spark predicate: acquisition day-of-month == PROBE_DAY."""
-    return F.substring(F.split(F.col(col), "_")[3], 7, 2) == PROBE_DAY
+    return _scene_date_parts()[2] == PROBE_DAY
 
 
-PROBE_SQL = "substring(split_part(scene_id, '_', 4), 7, 2) = '03'"
-
-
-def ground_truths(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def ground_truths(spark: SparkSession) -> DataFrame:
     """GT CSV with eager year/month/day derivation (data_loader.py:86-89).
     gt_id materializes CSV file order so first-match dedup is
     deterministic under distributed reads (data_loader.py:70)."""
     df = (
         spark.read.option("header", True)
         .schema("utc_date timestamp, station_id int, air_temp double, gt_id bigint")
-        .csv(f"{fixture_dir}/ground_truths.csv")
+        .csv(f"{FIXTURE_DIR}/ground_truths.csv")
     )
     return df.select(
         "utc_date",
@@ -83,7 +89,7 @@ def ground_truths(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFr
     )
 
 
-def stations_dim(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def stations_dim(spark: SparkSession) -> DataFrame:
     """Station dimension (easting/northing deliberately strings, like
     config.py's IMS_STATIONS). Always broadcast in joins."""
     return (
@@ -92,16 +98,16 @@ def stations_dim(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFra
             "id int, name string, longitude double, latitude double,"
             " easting string, northing string"
         )
-        .csv(f"{fixture_dir}/stations.csv")
+        .csv(f"{FIXTURE_DIR}/stations.csv")
     )
 
 
-def station_lists(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def station_lists(spark: SparkSession) -> DataFrame:
     """Parse `[26, 41, 42]` station files into relational
     (scene_id, station_pos, station_id) rows. The positional index is
     the reference's implicit list-position correlation made explicit
     (SURVEY §2.4 join_zip_positional)."""
-    raw = spark.read.text(f"{fixture_dir}/scene_stations/*.txt").select(
+    raw = spark.read.text(f"{FIXTURE_DIR}/scene_stations/*.txt").select(
         F.regexp_extract(F.input_file_name(), r"([^/]+)_stations\.txt$", 1).alias(
             "scene_id"
         ),
@@ -117,7 +123,7 @@ def station_lists(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFr
     )
 
 
-def scene_metadata(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def scene_metadata(spark: SparkSession) -> DataFrame:
     """Whole-file nested JSON → one row per scene with the two consumed
     sections as map<string,string>. Every leaf in an MTL file is a
     string (SURVEY §1.2), so the whole document reads as
@@ -133,7 +139,7 @@ def scene_metadata(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataF
     df = (
         spark.read.option("multiLine", True)
         .schema(doc_schema)
-        .json(f"{fixture_dir}/metadatas/*.json")
+        .json(f"{FIXTURE_DIR}/metadatas/*.json")
         .select(
             F.regexp_extract(
                 F.input_file_name(), r"([^/]+)_MTL_metadata\.json$", 1
@@ -163,20 +169,20 @@ PARQUET_SCHEMAS = {
 }
 
 
-def scene_patches(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def scene_patches(spark: SparkSession) -> DataFrame:
     """Nested patch form: one row per (scene, station), bands as
     array<array<array<int>>> (bands × 7 × 7)."""
     return spark.read.schema(PARQUET_SCHEMAS["scene_patches"]).parquet(
-        f"{fixture_dir}/scene_patches.parquet"
+        f"{FIXTURE_DIR}/scene_patches.parquet"
     )
 
 
-def scene_pixels(spark: SparkSession, fixture_dir: str = FIXTURE_DIR) -> DataFrame:
+def scene_pixels(spark: SparkSession) -> DataFrame:
     """Fully-long pixel form (scene_id, station_id, band, y, x, dn) —
     the 100 TB layout (SURVEY §1.7): plain columns, partition-prunable,
     no nested codegen pressure."""
     return spark.read.schema(PARQUET_SCHEMAS["scene_pixels"]).parquet(
-        f"{fixture_dir}/scene_pixels.parquet"
+        f"{FIXTURE_DIR}/scene_pixels.parquet"
     )
 
 
@@ -203,15 +209,10 @@ def _real_pt_decoder(content: bytes) -> list:
         return arr.transpose(1, 0, 2, 3).astype(np.int32).tolist()
 
 
-# Back-compat alias (pre-r5 name, when the path was torch-gated).
-_torch_pt_decoder = _real_pt_decoder
-
-
 def ingest_pt_tensors(
     spark: SparkSession,
     pt_dir: str,
     decoder=None,
-    pattern: str = ".pt",
     scene_predicate=None,
 ) -> DataFrame:
     """One-time .pt → relational conversion job (src_pt_tensor,
@@ -224,12 +225,12 @@ def ingest_pt_tensors(
     output schema — is tested with a deterministic fake while the torch
     decoder stays gated behind its missing dependency.
     """
-    decode_one = decoder or _torch_pt_decoder
+    decode_one = decoder or _real_pt_decoder
 
     files = (
         spark.read.format("binaryFile")
         .load(pt_dir)
-        .filter(F.col("path").endswith(pattern))
+        .filter(F.col("path").endswith(".pt"))
     )
     if scene_predicate is not None:
         # manifest-level pruning: the predicate sees the scene_id derived
@@ -252,7 +253,7 @@ def ingest_pt_tensors(
         for pdf in batches:
             rows = []
             for path, content in zip(pdf["path"], pdf["content"]):
-                scene_id = _os.path.basename(path)[: -len(pattern)]
+                scene_id = _os.path.basename(path)[: -len(".pt")]
                 for pos, bands in enumerate(decode_one(bytes(content))):
                     rows.append(
                         {

@@ -107,7 +107,7 @@ def split_guard(df):
     return df
 
 
-def global_prefix(df, order_cols, value_col=None, num_ranges=None):
+def global_prefix(df, order_cols, value_col=None):
     """Distributed INCLUSIVE prefix aggregate consistent with
     ``ORDER BY order_cols`` over the whole frame: prefix COUNT (the
     global ROW_NUMBER) when ``value_col`` is None, else prefix
@@ -148,7 +148,7 @@ def global_prefix(df, order_cols, value_col=None, num_ranges=None):
             f"global_prefix: input columns collide with reserved helper "
             f"names {sorted(clash)}; rename them before calling"
         )
-    num = num_ranges or df.sparkSession.sparkContext.defaultParallelism
+    num = df.sparkSession.sparkContext.defaultParallelism
     val = F.lit(1) if value_col is None else F.col(value_col)
     ranged = (
         df.repartitionByRange(num, *order_cols)

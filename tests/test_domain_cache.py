@@ -59,3 +59,14 @@ def test_patch_sources_build_without_jobs(spark):
     for t, df in built.items():  # the explicit schema is the files' own
         inferred = spark.read.parquet(f"{landsat.FIXTURE_DIR}/{t}.parquet")
         assert df.schema == inferred.schema, t
+
+    # the valid-patch base adds no job to its metadata read: split_guard
+    # sizes the patch scan without running it. (Listing the metadata
+    # glob is itself one job once it exceeds Spark's parallel-listing
+    # threshold of 32 paths, as the 119-file fixture set does.)
+    start = scheduler.nextJobId()
+    landsat.scene_metadata(spark)
+    meta_jobs = scheduler.nextJobId() - start
+    start = scheduler.nextJobId()
+    domain._valid_scene_base(spark)
+    assert scheduler.nextJobId() - start == meta_jobs

@@ -182,3 +182,20 @@ def test_torch_pt_blocks_arbitrary_globals():
         zf.writestr("x/version", "3")
     with pytest.raises(UnsupportedPtError, match="blocked global"):
         load_pt(buf.getvalue())
+
+
+def test_pixels_long_is_shape_generic(spark):
+    """The pixel-long explode on 2 bands × 2 rows × 3 cols (every
+    fixture patch is 7 or 11 bands × 7 × 7): one row per numpy index,
+    band 1-based, y the row and x the column."""
+    from landsat_tair_data_pipeline_spark.operators.domain import _pixels_long
+
+    arr = np.arange(12, dtype=np.int32).reshape(2, 2, 3) * 10 + 7
+    df = spark.createDataFrame(
+        [("s", arr.tolist())], "scene_id string, bands array<array<array<int>>>"
+    )
+    px = _pixels_long(df, ["scene_id"], "bands", "v")
+    assert px.columns == ["scene_id", "band", "y", "x", "v"]
+    want = {("s", b + 1, y, x, int(arr[b, y, x])) for b, y, x in np.ndindex(arr.shape)}
+    got = [tuple(r) for r in px.collect()]
+    assert len(got) == arr.size and set(got) == want
