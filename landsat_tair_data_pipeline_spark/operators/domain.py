@@ -770,8 +770,9 @@ def src_dir_listing(spark: SparkSession, sf: str) -> DataFrame:
     .pt vs .txt). Spark side lists via the binaryFile source (distributed
     manifest, no driver-side os.listdir); only names/kinds surface."""
     files = (
-        spark.read.format("binaryFile")
-        .load(f"{FIXTURE_DIR}/scene_stations/*.txt")
+        landsat.dir_reader(spark, "txt")
+        .format("binaryFile")
+        .load(f"{FIXTURE_DIR}/scene_stations")
         .select(F.input_file_name().alias("p"))
         .select(
             F.regexp_extract("p", r"([^/]+)$", 1).alias("file_name"),
@@ -779,8 +780,9 @@ def src_dir_listing(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     metas = (
-        spark.read.format("binaryFile")
-        .load(f"{FIXTURE_DIR}/metadatas/*.json")
+        landsat.dir_reader(spark, "json")
+        .format("binaryFile")
+        .load(f"{FIXTURE_DIR}/metadatas")
         .select(F.input_file_name().alias("p"))
         .select(
             F.regexp_extract("p", r"([^/]+)$", 1).alias("file_name"),

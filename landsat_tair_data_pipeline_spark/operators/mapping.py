@@ -114,8 +114,9 @@ def proj_scene_id_from_filename(spark: SparkSession, sf: str) -> DataFrame:
     """Filename-convention identity (data_loader.py:137): asset file
     name → scene_id, via input_file_name at the scan."""
     return (
-        spark.read.format("binaryFile")
-        .load(f"{FIXTURE_DIR}/scene_stations/*.txt")
+        landsat.dir_reader(spark, "txt")
+        .format("binaryFile")
+        .load(f"{FIXTURE_DIR}/scene_stations")
         .select(F.input_file_name().alias("p"))
         .select(
             F.regexp_extract("p", r"([^/]+)$", 1).alias("file_name"),

@@ -59,6 +59,18 @@ def get_spark(app_name: str = "landsat-tair-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Tungsten page size, fixed at the floor of Spark's derived
+        # default (heap / cores / 16, clamped to 1-64 MiB). Derived, it
+        # is 64 MiB on a 4-core 8g driver, and every broadcast hash
+        # relation takes at least one page however few rows it holds:
+        # a 20-row broadcast join added 64.03 MiB to the driver's
+        # storage memory, and landsat_chain held 3 x 67.1 MB of such
+        # blocks (held_mem_mb 302 -> 104 MB at 1 MiB). A record larger
+        # than a page still gets a page of its own size. The conf is
+        # static, so tune() cannot set it: a session built elsewhere
+        # (the bare one __spark_entry__ is handed) keeps Spark's
+        # derived default.
+        .config("spark.buffer.pageSize", "1m")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

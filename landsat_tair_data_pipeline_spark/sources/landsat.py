@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
@@ -69,6 +69,15 @@ def probe_scene() -> Column:
     return _scene_date_parts()[2] == PROBE_DAY
 
 
+def dir_reader(spark: SparkSession, ext: str) -> DataFrameReader:
+    """Reader for the ``*.<ext>`` files of the one directory passed to
+    its load. Pass the directory, not a ``dir/*.ext`` glob: a glob that
+    expands past Spark's parallel-listing threshold (32 paths, 119 in
+    the fixture set) submits a file-listing job at every plan build,
+    while one root directory is listed on the driver."""
+    return spark.read.option("pathGlobFilter", f"*.{ext}")
+
+
 def ground_truths(spark: SparkSession) -> DataFrame:
     """GT CSV with eager year/month/day derivation (data_loader.py:86-89).
     gt_id materializes CSV file order so first-match dedup is
@@ -107,7 +116,7 @@ def station_lists(spark: SparkSession) -> DataFrame:
     (scene_id, station_pos, station_id) rows. The positional index is
     the reference's implicit list-position correlation made explicit
     (SURVEY §2.4 join_zip_positional)."""
-    raw = spark.read.text(f"{FIXTURE_DIR}/scene_stations/*.txt").select(
+    raw = dir_reader(spark, "txt").text(f"{FIXTURE_DIR}/scene_stations").select(
         F.regexp_extract(F.input_file_name(), r"([^/]+)_stations\.txt$", 1).alias(
             "scene_id"
         ),
@@ -137,9 +146,10 @@ def scene_metadata(spark: SparkSession) -> DataFrame:
     as_map = MapType(StringType(), StringType())
     doc_schema = "LANDSAT_METADATA_FILE map<string, map<string,string>>"
     df = (
-        spark.read.option("multiLine", True)
+        dir_reader(spark, "json")
+        .option("multiLine", True)
         .schema(doc_schema)
-        .json(f"{FIXTURE_DIR}/metadatas/*.json")
+        .json(f"{FIXTURE_DIR}/metadatas")
         .select(
             F.regexp_extract(
                 F.input_file_name(), r"([^/]+)_MTL_metadata\.json$", 1

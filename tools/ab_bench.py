@@ -36,7 +36,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Default panel: the same representative mix the r7 A/B used — cheap
 # shuffly keys, window/agg shapes, and the heavy dedup/pipeline keys
-# where a regression would matter most.
+# where a regression would matter most — plus two keys that spill at
+# sf0.1 (equi-depth histogram, z-order layout stats), where a change to
+# Tungsten pages or the memory manager shows first.
 DEFAULT_KEYS = [
     "sample_stratified",
     "agg_salted_skew",
@@ -47,6 +49,8 @@ DEFAULT_KEYS = [
     "dedup_clusters",
     "llm_data_pipeline_v2",
     "llm_data_pipeline_v3",
+    "agg_histogram_equidepth",
+    "layout_zorder_stats",
 ]
 
 # Self-contained runner executed once per side in its own process: the

@@ -6,7 +6,9 @@ plans/<tag>/<key>_<suffix>.txt, then time `reps` noop-sink executions
 (guide §1.4) with the job labelled (§1.5), reporting min/median and
 the per-rep list. Plan-shape counters (Exchange count, join strategies,
 Python-eval nodes) print alongside so before/after claims are checkable
-without a Spark UI.
+without a Spark UI. After each key's reps, the driver's storage memory
+is read: `storage_mb` is all of it, `pinned_mb` what cached RDD blocks
+do not account for (broadcast values, mostly).
 
 Usage:
     python tools/profile_key.py --keys k1,k2 [--suffix before]
@@ -46,6 +48,19 @@ def plan_counters(plan: str) -> dict:
         "scans": len(re.findall(r"\bScan parquet\b", plan)),
     }
     return c
+
+
+def storage_readings(spark) -> dict:
+    """Driver storage memory in use, all of it and the part held by
+    something other than cached RDD blocks, in MB."""
+    sc = spark.sparkContext
+    used = sc._jvm.org.apache.spark.SparkEnv.get().memoryManager().storageMemoryUsed()
+    infos = sc._jsc.sc().getRDDStorageInfo()
+    cached = sum(i.memSize() for i in infos)
+    return {
+        "storage_mb": round(used / 1e6, 3),
+        "pinned_mb": round((used - cached) / 1e6, 3),
+    }
 
 
 def main() -> None:
@@ -112,9 +127,12 @@ def main() -> None:
             "min": min(rep_times),
             "median": round(statistics.median(rep_times), 3),
             "plan": plan_counters(plan),
+            **storage_readings(spark),
         }
         print(
             f"{name:34s} min={min(rep_times):7.3f} med={results[name]['median']:7.3f} "
+            f"storage={results[name]['storage_mb']}MB "
+            f"pinned={results[name]['pinned_mb']}MB "
             f"reps={rep_times} {results[name]['plan']}",
             flush=True,
         )
