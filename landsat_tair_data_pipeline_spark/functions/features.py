@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.landsat import _scene_date_parts
+from ..util import recipe
 from .radiometry import k_constant
 
 # 0-based band indexes selected for Landsat 8/9 (config.py:19)
@@ -76,12 +77,17 @@ def assemble_features(df: DataFrame) -> DataFrame:
     rescaling, thermal, longitude, latitude, and scene_id (for date
     parts, feature_extractor.py:106-109).
     """
+    return df.withColumn("features", _features())
+
+
+@recipe
+def _features() -> Column:
+    """The ``features`` column of ``assemble_features``."""
     year, month, day = (p.cast("double") for p in _scene_date_parts())
-    features = F.concat(
+    return F.concat(
         _image343(F.col("bt_bands")),
         _coeffs14(F.col("is_landsat_5")),
         _k2_k1(),
         F.array(F.col("is_landsat_5").cast("double")),
         F.array(F.col("longitude"), F.col("latitude"), year, month, day),
     )
-    return df.withColumn("features", features)

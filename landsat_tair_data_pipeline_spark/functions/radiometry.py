@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import recipe
+
 
 def coeff(map_col: str, prefix: str, band: Column) -> Column:
     """String-valued metadata coefficient → double (the reference's
@@ -35,6 +37,7 @@ def coeff(map_col: str, prefix: str, band: Column) -> Column:
     ).cast("double")
 
 
+@recipe
 def k_constant(map_col: str, which: str) -> Column:
     """K1/K2 with BAND_10 → BAND_6 fallback (feature_extractor.py:82-95
     probes in exactly this order)."""
@@ -101,7 +104,13 @@ def filter_valid_scenes(df: DataFrame) -> DataFrame:
     LEVEL1_THERMAL_CONSTANTS section lacking both BAND_10 and BAND_6
     constants still raises KeyError there, so it must drop here too
     (and the DuckDB oracle's meta_k WHERE k1/k2 IS NOT NULL agrees)."""
-    return df.where(
+    return df.where(_valid_scene())
+
+
+@recipe
+def _valid_scene() -> Column:
+    """The row predicate of ``filter_valid_scenes``."""
+    return (
         F.size("bands").isin(7, 11)
         & F.col("rescaling").isNotNull()
         & k_constant("thermal", "K1").isNotNull()
@@ -116,7 +125,12 @@ def _is_landsat_5(n_bands: Column) -> Column:
 
 def with_sensor_flag(df: DataFrame) -> DataFrame:
     """is_landsat_5 from band count (SURVEY §2.2 proj_sensor_flag)."""
-    return df.withColumn("is_landsat_5", _is_landsat_5(F.size("bands")))
+    return df.withColumn("is_landsat_5", _patch_sensor_flag())
+
+
+@recipe
+def _patch_sensor_flag() -> Column:
+    return _is_landsat_5(F.size("bands"))
 
 
 def _rescaling(band: Column) -> tuple[Column, Column]:
@@ -151,6 +165,12 @@ def to_brightness_temperature(df: DataFrame) -> DataFrame:
     map lookups are loop-invariant so Catalyst evaluates them once per
     row, not per pixel.
     """
+    return df.withColumn("bt_bands", _bt_bands())
+
+
+@recipe
+def _bt_bands() -> Column:
+    """The ``bt_bands`` column of ``to_brightness_temperature``."""
     thermal_idx = thermal_band_index(F.size("bands"), base=0)
     k1 = k_constant("thermal", "K1")
     k2 = k_constant("thermal", "K2")
@@ -167,4 +187,4 @@ def to_brightness_temperature(df: DataFrame) -> DataFrame:
             .otherwise(_per_pixel(grid, lambda px: bt(px)[1])),
         ).otherwise(_radiance_grid(grid, i))
 
-    return df.withColumn("bt_bands", F.transform(F.col("bands"), band_expr))
+    return F.transform(F.col("bands"), band_expr)

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import QuerySpec
 from ..sources import landsat
-from ..util import global_prefix, kernel, persist_tracked
+from ..util import global_prefix, kernel, persist_tracked, recipe
 from ..sources.landsat import FIXTURE_DIR, PROBE_SQL
 from .text import _TOKS_SQL
 
@@ -235,25 +235,38 @@ def aug_explode_4x(spark: SparkSession, sf: str) -> DataFrame:
     multiset, so a plain sum would pass even with wrong indexes; the
     position weights catch that) — while the random jitters live in
     the rows-only queries."""
-    feat = features_with_gt(spark)
+    pixels, checksums, variants, out = _explode_4x_cols()
+    sums = (
+        features_with_gt(spark)
+        .select(*pixels)
+        .groupBy("scene_id", "station_id", "air_temp")
+        .agg(*checksums)
+    )
+    return sums.select(*variants).select(*out)
 
-    # Rotation-as-permutation: the checksum Σ out[q]·q over the rotated
-    # image equals Σ v[p]·w_k(p) over the ORIGINAL flat layout, where
-    # w_k maps in-position p=(b,y,x) to its out-position under rotation
-    # k. The flat image therefore posexplodes ONCE and all four
-    # checksums are conditional sums with w_k as plain integer column
-    # arithmetic — every operator whole-stage-codegen'd. The r1 form
-    # (rebuild the nested tensor from the flat vector, rotate with
-    # element_at arithmetic, reduce with aggregate()) ran interpreted —
-    # Spark evaluates higher-order-function lambdas per element outside
-    # codegen — at ~3ms/row (18s at 120 scenes); this is sub-second.
-    # The flat-layout contract (augmentation indexes the 365 vector,
-    # data_augmentation.py:160-180) still holds: the input is
-    # features[1..343].
-    px = feat.select(
-        "scene_id",
-        "station_id",
-        "air_temp",
+
+@recipe
+def _explode_4x_cols() -> tuple:
+    """aug_explode_4x's (image pixel columns, per-variant checksum
+    aggregates, variant explode, output columns).
+
+    Rotation-as-permutation: the checksum Σ out[q]·q over the rotated
+    image equals Σ v[p]·w_k(p) over the ORIGINAL flat layout, where
+    w_k maps in-position p=(b,y,x) to its out-position under rotation
+    k. The flat image therefore posexplodes ONCE and all four
+    checksums are conditional sums with w_k as plain integer column
+    arithmetic — every operator whole-stage-codegen'd. The r1 form
+    (rebuild the nested tensor from the flat vector, rotate with
+    element_at arithmetic, reduce with aggregate()) ran interpreted —
+    Spark evaluates higher-order-function lambdas per element outside
+    codegen — at ~3ms/row (18s at 120 scenes); this is sub-second.
+    The flat-layout contract (augmentation indexes the 365 vector,
+    data_augmentation.py:160-180) still holds: the input is
+    features[1..343]."""
+    pixels = (
+        F.col("scene_id"),
+        F.col("station_id"),
+        F.col("air_temp"),
         F.posexplode(F.slice(F.col("features"), 1, IMG_LEN)).alias("p", "v"),
     )
     b = F.floor(F.col("p") / (GRID * GRID)).cast("int")
@@ -267,11 +280,9 @@ def aug_explode_4x(spark: SparkSession, sf: str) -> DataFrame:
         b * 49 + (n1 - y) * GRID + (n1 - x),
         b * 49 + x * GRID + (n1 - y),
     ]
-    sums = px.groupBy("scene_id", "station_id", "air_temp").agg(
-        *[
-            F.sum(F.col("v") * w[k].cast("double")).alias(f"_chk{k}")
-            for k in range(len(VARIANTS))
-        ]
+    checksums = tuple(
+        F.sum(F.col("v") * w[k].cast("double")).alias(f"_chk{k}")
+        for k in range(len(VARIANTS))
     )
     variants = F.array(
         *[
@@ -279,17 +290,17 @@ def aug_explode_4x(spark: SparkSession, sf: str) -> DataFrame:
             for k, v in enumerate(VARIANTS)
         ]
     )
-    return sums.select(
-        "scene_id",
-        "station_id",
-        "air_temp",
-        F.explode(variants).alias("v"),
-    ).select(
-        "scene_id",
-        "station_id",
-        F.col("v.variant").alias("variant"),
-        F.round(F.col("v.chk") + 1e-9, 2).alias("img_checksum"),
-        "air_temp",
+    keys = (F.col("scene_id"), F.col("station_id"))
+    return (
+        pixels,
+        checksums,
+        (*keys, F.col("air_temp"), F.explode(variants).alias("v")),
+        (
+            *keys,
+            F.col("v.variant").alias("variant"),
+            F.round(F.col("v.chk") + 1e-9, 2).alias("img_checksum"),
+            F.col("air_temp"),
+        ),
     )
 
 
@@ -370,11 +381,29 @@ def aug_geo_shift(spark: SparkSession, sf: str) -> DataFrame:
     return out
 
 
+# documents' columns as the sf tables store them (FIXTURES.md)
+DOCUMENTS_SCHEMA = (
+    "doc_id bigint, text string, lang string, source string, n_chars bigint"
+)
+
+
+def doc_ids(spark: SparkSession, sf: str) -> DataFrame:
+    """The ``doc_id`` column of ``documents``: the split and augment
+    count keys' input. The read names the table's columns, so a build
+    submits no footer schema-inference job; the scan reads doc_id
+    alone."""
+    return (
+        spark.read.schema(DOCUMENTS_SCHEMA)
+        .parquet(f"{sf}/documents.parquet")
+        .select("doc_id")
+    )
+
+
 def split_train_test(spark: SparkSession, sf: str) -> DataFrame:
     """Exact 80/20 split sizes (feature_extractor.py:159-169:
     split_idx = int(n * 0.8), prefix = train). Assignment is random →
     the deterministic, oracle-checkable surface is the exact sizes."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    docs = doc_ids(spark, sf)
     return (
         exact_split(docs, seed=42, train_ratio=0.8)
         .groupBy("split")
@@ -638,7 +667,7 @@ def aug_train_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     (main.py:74-98; augmentation after split — the code wins over the
     README, SURVEY §2.9). Real explode + union; the deterministic
     surface is the count algebra: 4·floor(0.8n) + (n − floor(0.8n))."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    docs = doc_ids(spark, sf)
     labeled = exact_split(docs, seed=42, train_ratio=0.8)
     train = labeled.where(F.col("split") == "train")
     test = labeled.where(F.col("split") == "test")

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -57,7 +57,7 @@ from ..functions.radiometry import (
 from ..registry import QuerySpec
 from ..sources import landsat
 from ..sources.landsat import FIXTURE_DIR, _scene_date_parts
-from ..util import split_guard
+from ..util import recipe, split_guard
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB reads the same fixture files directly)
@@ -152,25 +152,37 @@ scene_dates AS (
 
 def _scene_dates(df: DataFrame) -> DataFrame:
     """proj_scene_date_parse (data_loader.py:56-59): YYYYMMDD token[3]."""
-    yr, mo, dy = (p.cast("int") for p in _scene_date_parts())
+    yr, mo, dy = _scene_date_ints()
     return df.withColumns({"yr": yr, "mo": mo, "dy": dy})
+
+
+@recipe
+def _scene_date_ints() -> tuple[Column, ...]:
+    return tuple(p.cast("int") for p in _scene_date_parts())
 
 
 def _gt_first_match(spark: SparkSession) -> DataFrame:
     """GT deduped to first CSV-order row per (date, station) — the
     reference's iloc[0] (data_loader.py:70) made deterministic."""
+    rn, first, cols = _gt_first_match_cols()
     gt = landsat.ground_truths(spark)
+    return gt.withColumn("rn", rn).where(first).select(*cols)
+
+
+@recipe
+def _gt_first_match_cols() -> tuple:
+    """(row number, its first-row predicate, output columns)."""
     w = Window.partitionBy("year", "month", "day", "station_id").orderBy("gt_id")
     return (
-        gt.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
+        F.row_number().over(w),
+        F.col("rn") == 1,
+        (
             F.col("year").alias("yr"),
             F.col("month").alias("mo"),
             F.col("day").alias("dy"),
-            "station_id",
-            "air_temp",
-        )
+            F.col("station_id"),
+            F.col("air_temp"),
+        ),
     )
 
 
@@ -442,11 +454,15 @@ def map_concat_features(spark: SparkSession, sf: str) -> DataFrame:
     is the vector length plus probes at every layout boundary
     (SURVEY §1.6): first image value, first coefficient, K2, K1,
     is_landsat_5, longitude, year — any remap/ordering bug moves one."""
-    feat = features_with_gt(spark)
+    return features_with_gt(spark).select(*_feature_probes())
+
+
+@recipe
+def _feature_probes() -> tuple[Column, ...]:
     f = F.col("features")
-    return feat.select(
-        "scene_id",
-        "station_id",
+    return (
+        F.col("scene_id"),
+        F.col("station_id"),
         F.size(f).alias("n_features"),
         F.round(F.element_at(f, 1) + 1e-9, 6).alias("f_img0"),
         F.round(F.element_at(f, 344) + 1e-9, 6).alias("f_coeff0"),
@@ -455,7 +471,7 @@ def map_concat_features(spark: SparkSession, sf: str) -> DataFrame:
         F.element_at(f, 360).alias("f_is5"),
         F.element_at(f, 361).alias("f_lon"),
         F.element_at(f, 363).alias("f_year"),
-        "air_temp",
+        F.col("air_temp"),
     )
 
 
@@ -504,8 +520,12 @@ def domain_pipeline_summary(spark: SparkSession, sf: str) -> DataFrame:
     """The reference main()'s printed counters as one aggregate row
     (main.py:100-113): sample/scene/station counts + air-temp summary.
     Trap: numpy .std() is population std → stddev_pop (SURVEY §2.5)."""
-    feats = map_concat_features(spark, sf)
-    return feats.agg(
+    return map_concat_features(spark, sf).agg(*_summary_aggs())
+
+
+@recipe
+def _summary_aggs() -> tuple[Column, ...]:
+    return (
         F.count(F.lit(1)).alias("n_samples"),
         F.countDistinct("scene_id").alias("n_scenes"),
         F.countDistinct("station_id").alias("n_stations"),
@@ -548,14 +568,23 @@ def agg_domain_grouped(spark: SparkSession, sf: str) -> DataFrame:
     semantics): plain F.log returns NULL on non-positive radiance,
     silently excluding such pixels from min/max/avg/stddev while n_px
     still counts them."""
+    px_cols, bt_cols, stats = _grouped_bt_cols()
     base = _scene_dates(_valid_scene_base(spark))
+    thermal_px = base.select(*px_cols).select(*bt_cols)
+    return thermal_px.groupBy("is_landsat_5", "yr").agg(*stats)
+
+
+@recipe
+def _grouped_bt_cols() -> tuple:
+    """agg_domain_grouped's (thermal pixel columns, their BT columns,
+    the per-group statistics)."""
     n_bands = F.size("bands")
     band_1b = thermal_band_index(n_bands, base=1)
     thermal_grid = F.element_at("bands", band_1b)
     ml, al = _rescaling(band_1b)
-    px = base.select(
+    px_cols = (
         _is_landsat_5(n_bands).alias("is_landsat_5"),
-        "yr",
+        F.col("yr"),
         F.explode(F.flatten(thermal_grid)).alias("dn"),
         ml.alias("ml"),
         al.alias("al"),
@@ -565,14 +594,15 @@ def agg_domain_grouped(spark: SparkSession, sf: str) -> DataFrame:
     rad = _radiance(F.col("dn"), F.col("ml"), F.col("al"))
     bt_l5, bt_l89 = brightness_temperatures(rad, F.col("k1"), F.col("k2"))
     bt = F.when(F.col("is_landsat_5") == 1, bt_l5).otherwise(bt_l89)
-    thermal_px = px.select("is_landsat_5", "yr", bt.alias("bt"))
-    return thermal_px.groupBy("is_landsat_5", "yr").agg(
+    bt_cols = (F.col("is_landsat_5"), F.col("yr"), bt.alias("bt"))
+    stats = (
         F.count(F.lit(1)).alias("n_px"),
         F.round(F.min("bt") + 1e-9, 4).alias("min_bt"),
         F.round(F.max("bt") + 1e-9, 4).alias("max_bt"),
         F.round(F.avg("bt") + 1e-9, 4).alias("avg_bt"),
         F.round(F.stddev_pop("bt") + 1e-9, 4).alias("std_bt"),
     )
+    return px_cols, bt_cols, stats
 
 
 _DOMAIN_GROUPED_SQL = """

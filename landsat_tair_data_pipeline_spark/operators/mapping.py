@@ -22,7 +22,7 @@ from ..functions.radiometry import (
 from ..registry import QuerySpec
 from ..sources import landsat
 from ..sources.landsat import FIXTURE_DIR
-from .augment import VARIANTS, exact_split
+from .augment import VARIANTS, doc_ids, exact_split
 from .domain import (
     _GT1,
     _META,
@@ -228,7 +228,7 @@ SELECT
 def agg_ratio(spark: SparkSession, sf: str) -> DataFrame:
     """Split/augmentation ratio algebra (main.py:93,107): exact train
     share and the 4× factor, computed from the real split + explode."""
-    docs = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id")
+    docs = doc_ids(spark, sf)
     labeled = exact_split(docs, seed=42, train_ratio=0.8)
     train = labeled.where(F.col("split") == "train")
     aug = train.select(

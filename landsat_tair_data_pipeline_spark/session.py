@@ -71,6 +71,22 @@ def get_spark(app_name: str = "landsat-tair-spark") -> SparkSession:
         # (the bare one __spark_entry__ is handed) keeps Spark's
         # derived default.
         .config("spark.buffer.pageSize", "1m")
+        # PySpark's per-call origin capture, on by default: every
+        # pyspark.sql.functions call and Column method first looks up
+        # the active session, reads a conf, walks the Python stack,
+        # retries `import ipykernel` and sets then clears the JVM's
+        # PySparkCurrentOrigin — about 8 extra py4j round trips per
+        # call, and the plan build of a steady landsat_chain pass is
+        # bound by them (3,506 -> 269 py4j calls per pass together
+        # with util.recipe). What an error loses without it is the
+        # Python call site in its DataFrame query context: a runtime
+        # DIVIDE_BY_ZERO reads '"divide" was called from <JVM frame>'
+        # instead of '"__truediv__" was called from <file>:<line>'; the
+        # error class and message are unchanged. PySpark reads the conf
+        # once per process, at the first Column built, so no Column may
+        # be built at import. Static, like the page size: the bare
+        # session __spark_entry__ is handed keeps PySpark's default.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType, StringType
 
-from ..util import kernel
+from ..util import kernel, recipe
 
 # Env-overridable so the gated full-cardinality validation
 # (tools/fullcard_check.py) can point the whole engine — including the
@@ -56,6 +56,7 @@ PROBE_DAY = "03"
 PROBE_SQL = f"substring(split_part(scene_id, '_', 4), 7, 2) = '{PROBE_DAY}'"
 
 
+@recipe
 def _scene_date_parts() -> tuple[Column, Column, Column]:
     """(YYYY, MM, DD) strings of ``scene_id``'s acquisition-date token,
     its fourth ``_``-separated field (LC08_L1TP_174034_20140103_...):
@@ -64,6 +65,7 @@ def _scene_date_parts() -> tuple[Column, Column, Column]:
     return F.substring(tok, 1, 4), F.substring(tok, 5, 2), F.substring(tok, 7, 2)
 
 
+@recipe
 def probe_scene() -> Column:
     """Spark predicate: acquisition day-of-month == PROBE_DAY."""
     return _scene_date_parts()[2] == PROBE_DAY
@@ -87,11 +89,16 @@ def ground_truths(spark: SparkSession) -> DataFrame:
         .schema("utc_date timestamp, station_id int, air_temp double, gt_id bigint")
         .csv(f"{FIXTURE_DIR}/ground_truths.csv")
     )
-    return df.select(
-        "utc_date",
-        "station_id",
-        "air_temp",
-        "gt_id",
+    return df.select(*_ground_truth_cols())
+
+
+@recipe
+def _ground_truth_cols() -> tuple[Column, ...]:
+    return (
+        F.col("utc_date"),
+        F.col("station_id"),
+        F.col("air_temp"),
+        F.col("gt_id"),
         F.year("utc_date").alias("year"),
         F.month("utc_date").alias("month"),
         F.dayofmonth("utc_date").alias("day"),
@@ -143,26 +150,31 @@ def scene_metadata(spark: SparkSession) -> DataFrame:
     missing the thermal section carry a NULL map (filt_metadata_keys
     probes it); arbitrary per-sensor key sets land in the maps
     unchanged."""
-    as_map = MapType(StringType(), StringType())
     doc_schema = "LANDSAT_METADATA_FILE map<string, map<string,string>>"
-    df = (
+    return (
         dir_reader(spark, "json")
         .option("multiLine", True)
         .schema(doc_schema)
         .json(f"{FIXTURE_DIR}/metadatas")
-        .select(
-            F.regexp_extract(
-                F.input_file_name(), r"([^/]+)_MTL_metadata\.json$", 1
-            ).alias("scene_id"),
-            F.element_at(
-                "LANDSAT_METADATA_FILE", "LEVEL1_RADIOMETRIC_RESCALING"
-            ).cast(as_map).alias("rescaling"),
-            F.element_at(
-                "LANDSAT_METADATA_FILE", "LEVEL1_THERMAL_CONSTANTS"
-            ).cast(as_map).alias("thermal"),
-        )
+        .select(*_metadata_cols())
     )
-    return df
+
+
+@recipe
+def _metadata_cols() -> tuple[Column, ...]:
+    """scene_id from the file name, and the two consumed sections."""
+    as_map = MapType(StringType(), StringType())
+    return (
+        F.regexp_extract(
+            F.input_file_name(), r"([^/]+)_MTL_metadata\.json$", 1
+        ).alias("scene_id"),
+        F.element_at(
+            "LANDSAT_METADATA_FILE", "LEVEL1_RADIOMETRIC_RESCALING"
+        ).cast(as_map).alias("rescaling"),
+        F.element_at(
+            "LANDSAT_METADATA_FILE", "LEVEL1_THERMAL_CONSTANTS"
+        ).cast(as_map).alias("thermal"),
+    )
 
 
 # Read schemas of the two parquet patch tables (FIXTURES.md §A.3). An

@@ -13,6 +13,8 @@ this.)
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import hashlib
 import inspect
 import os
@@ -94,6 +96,52 @@ class kernel:
     __name__ = property(lambda self: self.__wrapped__.__name__)
 
 
+def recipe(fn):
+    """``fn`` memoized for the life of the process: built on its first
+    call, then handed back as is.
+
+    For Column recipes made only from column names (``F.col("x")``,
+    ``F.size("bands")``, literals). Such a Column binds no session and
+    no plan, so one build serves every session of the process, one
+    started after a ``spark.stop()`` too. Each ``pyspark.sql.functions``
+    call and Column method is a py4j round trip to the driver JVM, and
+    the Landsat chain's recipes cost hundreds per query build.
+
+    Two rules keep that safe:
+    - never memoize a recipe that reads ``df["x"]`` or ``df.x``: those
+      bind the id of one plan;
+    - never call a recipe at import: PySpark reads
+      ``spark.python.sql.dataFrameDebugging.enabled`` once, at the
+      first Column built in the process, and with no session active
+      it settles on ``false`` for every session that follows (see
+      ``session.get_spark``)."""
+    return functools.cache(fn)
+
+
+@contextlib.contextmanager
+def py4j_calls(spark):
+    """Count the py4j call commands (``c``) the driver sends to the JVM
+    while the block runs; yields a dict whose ``"calls"`` it updates.
+
+    Only calls are counted, so the count is deterministic: py4j also
+    sends a memory-release command whenever Python garbage-collects a
+    JVM proxy, at the collector's pace rather than the build's."""
+    client = spark.sparkContext._gateway._gateway_client
+    seen = {"calls": 0}
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("c\n"):
+            seen["calls"] += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield seen
+    finally:
+        client.send_command = send
+
+
 def split_guard(df):
     """``df`` spread over ``defaultParallelism`` splits when it has fewer.
 
@@ -102,7 +150,9 @@ def split_guard(df):
     frame is under-split, so at real scale (thousands of splits) the
     plan has no extra exchange."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    # the split count of the frame's own physical plan; ``df.rdd``
+    # would plan it a second time and convert it for Python
+    if df._jdf.queryExecution().toRdd().getNumPartitions() < par:
         return df.repartition(par)
     return df
 

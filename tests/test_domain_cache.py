@@ -7,7 +7,7 @@ session switch decides whether the consumers hit the cache at all."""
 
 from __future__ import annotations
 
-from landsat_tair_data_pipeline_spark.operators import augment, domain
+from landsat_tair_data_pipeline_spark.operators import augment, domain, mapping
 from landsat_tair_data_pipeline_spark.sources import landsat
 
 
@@ -66,4 +66,18 @@ def test_patch_sources_build_without_jobs(spark):
     # parallel-listing threshold of 32 paths submits a listing job)
     start = scheduler.nextJobId()
     domain._valid_scene_base(spark)
+    assert scheduler.nextJobId() == start
+
+
+def test_doc_id_reads_build_without_jobs(spark, sf_dir):
+    """agg_ratio (and the split/augment count keys) read documents with
+    the table's own schema, so no build after the first submits a
+    footer schema-inference job."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    path = f"{sf_dir}/documents.parquet"
+    named = spark.read.schema(augment.DOCUMENTS_SCHEMA).parquet(path)
+    assert named.schema == spark.read.parquet(path).schema  # the files' own
+    mapping.agg_ratio(spark, sf_dir)
+    start = scheduler.nextJobId()
+    mapping.agg_ratio(spark, sf_dir)
     assert scheduler.nextJobId() == start

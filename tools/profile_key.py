@@ -8,7 +8,9 @@ the per-rep list. Plan-shape counters (Exchange count, join strategies,
 Python-eval nodes) print alongside so before/after claims are checkable
 without a Spark UI. After each key's reps, the driver's storage memory
 is read: `storage_mb` is all of it, `pinned_mb` what cached RDD blocks
-do not account for (broadcast values, mostly).
+do not account for (broadcast values, mostly). `build_py4j_calls` is
+the py4j call commands of the key's last plan build (`util.py4j_calls`,
+the counter of tests/test_build_round_trips.py).
 
 Usage:
     python tools/profile_key.py --keys k1,k2 [--suffix before]
@@ -79,6 +81,7 @@ def main() -> None:
 
     from landsat_tair_data_pipeline_spark.registry import spark_queries
     from landsat_tair_data_pipeline_spark.session import get_spark
+    from landsat_tair_data_pipeline_spark.util import py4j_calls
 
     spark = get_spark("profile-key")
     spark.sparkContext.setLogLevel("ERROR")
@@ -117,9 +120,9 @@ def main() -> None:
             gc.collect()
             spark.sparkContext.setJobDescription(f"profile:{name}#{i}")
             t0 = time.perf_counter()
-            qs[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            with py4j_calls(spark) as build:
+                rep = qs[name](spark, args.sf_dir)
+            rep.write.format("noop").mode("overwrite").save()
             rep_times.append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(None)
         results[name] = {
@@ -127,12 +130,14 @@ def main() -> None:
             "min": min(rep_times),
             "median": round(statistics.median(rep_times), 3),
             "plan": plan_counters(plan),
+            "build_py4j_calls": build["calls"],
             **storage_readings(spark),
         }
         print(
             f"{name:34s} min={min(rep_times):7.3f} med={results[name]['median']:7.3f} "
             f"storage={results[name]['storage_mb']}MB "
             f"pinned={results[name]['pinned_mb']}MB "
+            f"build_calls={build['calls']} "
             f"reps={rep_times} {results[name]['plan']}",
             flush=True,
         )
