@@ -2,7 +2,8 @@
 
 Faithful re-expression of the reference's math (data_processor.py) as
 JVM higher-order array expressions over the nested (bands × 7 × 7)
-patch column — no Python in the hot path, whole-stage codegen applies.
+patch column — no Python in the hot path. Spark runs the lambdas
+interpreted, so what they read per pixel is kept small (``_per_row``).
 
 Formulas (data_processor.py:95-115, replicated verbatim — including
 the non-standard L8/9 BT form; do NOT "fix" it to the USGS formula):
@@ -27,14 +28,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..util import recipe
-
-
-def coeff(map_col: str, prefix: str, band: Column) -> Column:
-    """String-valued metadata coefficient → double (the reference's
-    float('7.6583E-01') coercion, data_processor.py:97-98)."""
-    return F.element_at(
-        F.col(map_col), F.concat(F.lit(prefix), band.cast("string"))
-    ).cast("double")
 
 
 @recipe
@@ -134,10 +127,13 @@ def _patch_sensor_flag() -> Column:
 
 
 def _rescaling(band: Column) -> tuple[Column, Column]:
-    """(ML, AL) radiance rescaling coefficients of a 1-based band."""
-    return (
-        coeff("rescaling", "RADIANCE_MULT_BAND_", band),
-        coeff("rescaling", "RADIANCE_ADD_BAND_", band),
+    """(ML, AL) radiance rescaling coefficients of a 1-based band, as
+    doubles (the reference's float('7.6583E-01') coercion,
+    data_processor.py:97-98)."""
+    return tuple(
+        F.element_at(F.col("rescaling"), F.concat(F.lit(prefix), band.cast("string")))
+        .cast("double")
+        for prefix in ("RADIANCE_MULT_BAND_", "RADIANCE_ADD_BAND_")
     )
 
 
@@ -146,24 +142,78 @@ def _radiance(dn: Column, ml: Column, al: Column) -> Column:
     return dn.cast("double") * ml + al
 
 
+# Landsat 8/9 has the most bands; a band past it reads NULL ML and AL,
+# as the metadata lookup of a band the metadata does not list does
+MAX_BANDS = 11
+
+
+@recipe
+def _row_coefficients() -> Column:
+    """The per-row invariants of the conversion as one struct: the band
+    count ``n_bands``, ML and AL of bands 1..MAX_BANDS as
+    ``array<double>``, K1 and K2."""
+    pairs = [_rescaling(F.lit(b)) for b in range(1, MAX_BANDS + 1)]
+    return F.struct(
+        F.size("bands").alias("n_bands"),
+        F.array(*[ml for ml, _ in pairs]).alias("ml"),
+        F.array(*[al for _, al in pairs]).alias("al"),
+        k_constant("thermal", "K1").alias("k1"),
+        k_constant("thermal", "K2").alias("k2"),
+    )
+
+
+def _per_row(convert) -> Column:
+    """``convert(c)``, with ``c`` the row's ``_row_coefficients`` bound
+    as a lambda variable, so the metadata lookups run once per row.
+
+    A ``transform`` lambda body runs interpreted and whole for every
+    element, and Catalyst hoists nothing loop-invariant out of it, so
+    a lookup written inside the per-pixel lambdas runs per pixel.
+    Projecting the invariants as columns first does not hold either:
+    Catalyst inlines a projected column back into a lambda that reads
+    it once (CollapseProject), and the filter that a posexplode of the
+    converted bands infers is pushed down through the projections into
+    the metadata join's condition with every lookup inlined. The
+    argument of a one-element ``transform`` is evaluated once per row
+    and is never inlined into its lambda."""
+    return F.transform(F.array(_row_coefficients()), convert)[0]
+
+
 def _per_pixel(grid: Column, fn) -> Column:
     """``fn`` applied to every pixel of one band's 2-D grid."""
     return F.transform(grid, lambda row: F.transform(row, fn))
 
 
-def _radiance_grid(grid: Column, i: Column) -> Column:
-    """One band's DN grid (0-based band index ``i``) → radiance grid."""
-    ml, al = _rescaling(i + 1)
-    return _per_pixel(grid, lambda px: _radiance(px, ml, al))
+def _band_radiance(c: Column, i: Column):
+    """DN → radiance of a pixel of the 0-based band ``i``, with the
+    row coefficients ``c`` (``get``: NULL past the end of the arrays,
+    never an ANSI index error)."""
+    ml, al = F.get(c["ml"], i), F.get(c["al"], i)
+    return lambda px: _radiance(px, ml, al)
+
+
+def to_radiance(df: DataFrame) -> DataFrame:
+    """bands(int DN) + rescaling map → ``rad_bands``, the nested double
+    radiance of every band, before any thermal overwrite."""
+    return df.withColumn("rad_bands", _rad_bands())
+
+
+@recipe
+def _rad_bands() -> Column:
+    """The ``rad_bands`` column of ``to_radiance``."""
+    return _per_row(
+        lambda c: F.transform(
+            F.col("bands"), lambda grid, i: _per_pixel(grid, _band_radiance(c, i))
+        )
+    )
 
 
 def to_brightness_temperature(df: DataFrame) -> DataFrame:
     """bands(int DN) + rescaling/thermal maps → ``bt_bands``, a nested
     double array with radiance everywhere and BT in the thermal band.
 
-    One transform pass with index-aware lambdas; the per-band ML/AL
-    map lookups are loop-invariant so Catalyst evaluates them once per
-    row, not per pixel.
+    The metadata lookups run once per row (``_per_row``); the per-pixel
+    lambdas read only the row coefficients and their own variables.
     """
     return df.withColumn("bt_bands", _bt_bands())
 
@@ -171,20 +221,22 @@ def to_brightness_temperature(df: DataFrame) -> DataFrame:
 @recipe
 def _bt_bands() -> Column:
     """The ``bt_bands`` column of ``to_brightness_temperature``."""
-    thermal_idx = thermal_band_index(F.size("bands"), base=0)
-    k1 = k_constant("thermal", "K1")
-    k2 = k_constant("thermal", "K2")
 
-    def band_expr(grid: Column, i: Column) -> Column:
-        ml, al = _rescaling(i + 1)
+    def convert(c: Column) -> Column:
+        thermal_idx = thermal_band_index(c["n_bands"], base=0)
 
-        def bt(px: Column) -> tuple[Column, Column]:
-            return brightness_temperatures(_radiance(px, ml, al), k1, k2)
+        def band_expr(grid: Column, i: Column) -> Column:
+            radiance = _band_radiance(c, i)
 
-        return F.when(
-            i == thermal_idx,
-            F.when(F.size("bands") == 7, _per_pixel(grid, lambda px: bt(px)[0]))
-            .otherwise(_per_pixel(grid, lambda px: bt(px)[1])),
-        ).otherwise(_radiance_grid(grid, i))
+            def bt(px: Column) -> tuple[Column, Column]:
+                return brightness_temperatures(radiance(px), c["k1"], c["k2"])
 
-    return F.transform(F.col("bands"), band_expr)
+            return F.when(
+                i == thermal_idx,
+                F.when(c["n_bands"] == 7, _per_pixel(grid, lambda px: bt(px)[0]))
+                .otherwise(_per_pixel(grid, lambda px: bt(px)[1])),
+            ).otherwise(_per_pixel(grid, radiance))
+
+        return F.transform(F.col("bands"), band_expr)
+
+    return _per_row(convert)

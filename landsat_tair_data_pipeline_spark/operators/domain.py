@@ -389,8 +389,9 @@ FROM btpx WHERE {probe}
 
 
 # Session-scoped memo for the assembled 365-feature frame — the most
-# expensive shared subplan in the domain suite (driver-side analysis of
-# the 365-element array assembly ~4 s + radiometry/join execution ~5 s),
+# expensive shared subplan in the domain suite (on the 119-scene
+# repository fixture, 4 vCPU: plan build ~3 s in a new process, ~0.3 s
+# after; radiometry, joins and assembly ~1.1 s warm, 14.8 MB cached),
 # consumed by map_concat_features / domain_pipeline_summary here and
 # augment.aug_explode_4x. SINGLE-slot cache
 # keyed by a session WEAKREF: a WeakKeyDictionary cannot evict here
@@ -434,17 +435,22 @@ def features_with_gt(spark: SparkSession) -> DataFrame:
     base = _scene_dates(base)
     gt1 = _gt_first_match(spark)
     dim = landsat.stations_dim(spark)
+    # both dimensions broadcast: gt1 is one row per (date, station).
+    # With no shuffle on the patch side, the conversion and the
+    # 365-array assembly run in the split_guard-spread scan tasks, and
+    # AQE has no shuffle it could coalesce to one partition (which
+    # would serialize them: 12-17 s serial vs sub-second spread)
     full = (
-        base.join(gt1, ["yr", "mo", "dy", "station_id"])  # sentinel rows drop
+        base.join(F.broadcast(gt1), ["yr", "mo", "dy", "station_id"])  # sentinel rows drop
         .join(F.broadcast(dim), F.col("station_id") == dim.id)
     )
-    # spread before the wide per-row projection — AQE would coalesce
-    # this few-MB join output to one partition and serialize the
-    # 365-array assembly (measured 12-17s serial vs sub-second spread).
-    # An explicit numPartitions is exempt from AQE coalescing; at real
-    # scale the join output is too large to coalesce anyway.
-    full = full.repartition(spark.sparkContext.defaultParallelism)
-    out = assemble_features(full).persist(StorageLevel.MEMORY_AND_DISK)
+    # cache only what the consumers read: bands, bt_bands and the
+    # metadata maps would triple the cached bytes
+    out = (
+        assemble_features(full)
+        .select("scene_id", "station_id", "air_temp", "features")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     _FEATURES_MEMO[0] = (weakref.ref(spark), out)
     return out
 
@@ -527,8 +533,10 @@ def domain_pipeline_summary(spark: SparkSession, sf: str) -> DataFrame:
 def _summary_aggs() -> tuple[Column, ...]:
     return (
         F.count(F.lit(1)).alias("n_samples"),
-        F.countDistinct("scene_id").alias("n_scenes"),
-        F.countDistinct("station_id").alias("n_stations"),
+        # the size of a collected set, not countDistinct: two distinct
+        # counts plan an Expand and a second aggregation (one more job)
+        F.size(F.collect_set("scene_id")).cast("long").alias("n_scenes"),
+        F.size(F.collect_set("station_id")).cast("long").alias("n_stations"),
         F.min("air_temp").alias("min_temp"),
         F.max("air_temp").alias("max_temp"),
         F.round(F.avg("air_temp") + 1e-9, 4).alias("avg_temp"),

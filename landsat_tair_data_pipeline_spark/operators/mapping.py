@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 from ..functions.features import _coeffs14, _image343, _l8_remap
 from ..functions.radiometry import (
-    _radiance_grid,
     k_constant,
     to_brightness_temperature,
+    to_radiance,
 )
 from ..registry import QuerySpec
 from ..sources import landsat
@@ -307,8 +307,7 @@ def _radiance_pixels(spark: SparkSession) -> DataFrame:
     """Pixel-long radiance on valid scenes — Spark side computed on the
     NESTED arrays then exploded (layout-independent vs the oracle)."""
     base = _valid_patches(landsat.scene_patches(spark).where(landsat.probe_scene()))
-    rad = base.withColumn("rad_bands", F.transform(F.col("bands"), _radiance_grid))
-    return _pixels_long(rad, ["scene_id", "station_id"], "rad_bands", "rad")
+    return _pixels_long(to_radiance(base), ["scene_id", "station_id"], "rad_bands", "rad")
 
 
 def map_dn_to_radiance(spark: SparkSession, sf: str) -> DataFrame:

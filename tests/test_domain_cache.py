@@ -7,6 +7,8 @@ session switch decides whether the consumers hit the cache at all."""
 
 from __future__ import annotations
 
+import re
+
 from landsat_tair_data_pipeline_spark.operators import augment, domain, mapping
 from landsat_tair_data_pipeline_spark.sources import landsat
 
@@ -81,3 +83,27 @@ def test_doc_id_reads_build_without_jobs(spark, sf_dir):
     start = scheduler.nextJobId()
     mapping.agg_ratio(spark, sf_dir)
     assert scheduler.nextJobId() == start
+
+
+def test_feature_frame_caches_only_what_its_consumers_read(spark):
+    """The cached frame holds the four columns its consumers read, and
+    its plan shuffles nowhere but split_guard's spread of the one-file
+    patch scan: with every join broadcast, AQE has no shuffle it could
+    coalesce to one partition, so the cache keeps defaultParallelism
+    partitions."""
+    spark.catalog.clearCache()
+    before = _persisted_rdds(spark)
+    df = domain.features_with_gt(spark.newSession())
+    plan = _plan(df)
+    cached = re.search(r"InMemoryRelation \[([^\]]*)\]", plan).group(1)
+    assert [c.split("#")[0].strip() for c in cached.split(",")] == [
+        "scene_id", "station_id", "air_temp", "features"
+    ]
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+
+    df.count()
+    (rdd_id,) = _persisted_rdds(spark) - before
+    (info,) = [
+        i for i in spark.sparkContext._jsc.sc().getRDDStorageInfo() if i.id() == rdd_id
+    ]
+    assert info.numPartitions() == spark.sparkContext.defaultParallelism

@@ -6,6 +6,7 @@ rather than only showing up in the bench.
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import re
 
@@ -137,6 +138,29 @@ def test_radiometry_stays_jvm_side(spark):
     plan = _plan(spark, "map_bt_pixels")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "transform(" in plan  # the HOF expressions, JVM-side
+
+
+def _profile_key():
+    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "profile_key.py")
+    spec = importlib.util.spec_from_file_location("profile_key", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module
+
+
+@pytest.mark.parametrize(
+    "name", ["map_concat_features", "map_bt_pixels", "map_dn_to_radiance", "map_flatten"]
+)
+def test_radiometry_lambdas_read_no_metadata(spark, name):
+    """The conversion's per-pixel lambdas read the row's coefficients,
+    never the metadata maps: a lambda body runs whole for every element,
+    so a lookup there runs once per pixel. This also fails if Catalyst
+    inlines the row coefficients back into a lambda."""
+    plan = SPECS[name].fn(spark, SF)._jdf.queryExecution().optimizedPlan().toString()
+    bodies = _profile_key().lambda_bodies(plan)
+    assert bodies, "no lambda in the plan"
+    lookups = [b for b in bodies if re.search(r"element_at\((rescaling|thermal)#", b)]
+    assert not lookups, f"{len(lookups)} of {len(bodies)} lambda bodies look up metadata"
 
 
 def test_topk_is_single_shuffle_window(spark):

@@ -10,7 +10,11 @@ without a Spark UI. After each key's reps, the driver's storage memory
 is read: `storage_mb` is all of it, `pinned_mb` what cached RDD blocks
 do not account for (broadcast values, mostly). `build_py4j_calls` is
 the py4j call commands of the key's last plan build (`util.py4j_calls`,
-the counter of tests/test_build_round_trips.py).
+the counter of tests/test_build_round_trips.py). `lambda_lookups`
+counts the element_at lookups inside higher-order-function lambda
+bodies: a lambda body runs whole for every element, so a metadata map
+lookup written there runs once per pixel (tests/test_plan_quality.py
+pins the Landsat conversion at 0).
 
 Usage:
     python tools/profile_key.py --keys k1,k2 [--suffix before]
@@ -33,6 +37,21 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def lambda_bodies(plan: str) -> list[str]:
+    """The outermost ``lambdafunction(...)`` spans of a plan string,
+    nested lambdas included in their parent's span."""
+    bodies, pos = [], 0
+    while (start := plan.find("lambdafunction(", pos)) != -1:
+        depth = 0
+        for end in range(plan.index("(", start), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start : end + 1])
+        pos = end + 1
+    return bodies
+
+
 def plan_counters(plan: str) -> dict:
     c = {
         "exchanges": len(re.findall(r"\bExchange\b", plan)),
@@ -48,6 +67,7 @@ def plan_counters(plan: str) -> dict:
         "map_in_arrow_pandas": len(re.findall(r"\bMapInPandas\b|\bMapInArrow\b|\bFlatMapGroupsInPandas\b", plan)),
         "in_memory_scans": len(re.findall(r"\bInMemoryTableScan\b", plan)),
         "scans": len(re.findall(r"\bScan parquet\b", plan)),
+        "lambda_lookups": sum(b.count("element_at(") for b in lambda_bodies(plan)),
     }
     return c
 
